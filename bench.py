@@ -1,4 +1,5 @@
-"""Driver bench contract: run the headline queries at
+"""Driver bench contract: run the entries marked ``bench`` in the
+registry (fences_spark/entry_queries.py ``ENTRIES``) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
@@ -20,82 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-HEADLINE = [
-    "validate_documents",
-    "violations_events_props",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "join_customer_orders",
-    "dedup_exact_documents",
-    "paragraph_dedup_docs",
-    "dedup_key_count",
-    "dup_key_exemplars",
-    "stats_profile",
-    "profile_exact_orders",
-    "lang_histogram",
-    "topk_events_per_user",
-    "events_json_props",
-    "minhash_lsh_docs",
-    "text_profile_docs",
-    "dup_span_docs",
-    "winnow_docs",
-    "repetition_docs",
-    "curate_documents",
-    "curate_full_docs",
-    "token_topk_docs",
-    "chunk_docs",
-    "tfidf_topterms_docs",
-    "pack_docs",
-    "mix_quota_docs",
-    "mix_interleave_docs",
-    "quality_pct_docs",
-    "lexdiv_docs",
-    "asof_click_purchase",
-    "range_view_error",
-    "sessionize_events",
-    "stream_sessionize_events",
-    "funnel_events",
-    "retention_events",
-    "cube_order_stats",
-    "outliers_order_price",
-    "embedding_topk",
-    "embedding_near_dup_lsh",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "grammar_priority_orders",
-    "grammar_number_docs",
-    "openapi_requests",
-    "openapi_responses",
-    "xsd_orders_xml",
-    "xsd_violation_paths",
-    "validate_dynamic_tree",
-    "json_violation_pointers",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_resize",
-    "generate_confusion_fixtures",
-    "validate_files_200k",
-    "files_verdicts_buckets",
-    "files_violation_rows",
-    "stream_files_verdicts",
-    "stream_drift_events",
-    "divergence_docs_stats",
-    "decontaminate_docs",
-    "redact_docs",
-    "blocklist_docs",
-    "length_band_docs",
-    "shuffle_shard_docs",
-    "luhn_cards_docs",
-    "iban_docs",
-    "entropy_secrets_docs",
-    "surprisal_docs",
-    "json_profile_orders",
-    "stream_schema_drift_events",
-    "scrub_docs",
-    "incremental_dedup_docs",
-    "json_values_orders",
-]
-
 
 def main() -> None:
     # optional composite-pipeline mode: `python bench.py --pipeline [ROWS]`
@@ -109,7 +34,7 @@ def main() -> None:
         print(json.dumps(bench_pipeline.run(rows, CPUS, None)))
         return
 
-    from fences_spark.entry_queries import QUERIES
+    from fences_spark.entry_queries import ENTRIES
     from fences_spark.session import get_spark
 
     spark = get_spark(app="fences_spark_bench", cores=CPUS, shuffle_partitions=CPUS)
@@ -127,15 +52,11 @@ def main() -> None:
     # (observed 2x on the whole suite from a cold container).  Those
     # are per-process/per-boot costs, not plan costs — a long-lived
     # cluster pays them once, so the baseline tracks the warm plan.
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is not None:
-            fn(spark, SF_DIR).count()
+    headline = [e for e in ENTRIES if e.bench]
+    for e in headline:
+        e.build(spark, SF_DIR).count()
 
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
+    for e in headline:
         # min over repeats absorbs host scheduling jitter on this
         # shared box; sub-second plans get extra repeats because their
         # wall is jitter-dominated (observed up to 3x run-to-run on
@@ -148,14 +69,14 @@ def main() -> None:
             if rep >= reps:
                 break
             t0 = time.time()
-            df = fn(spark, SF_DIR)
+            df = e.build(spark, SF_DIR)
             n = df.count()
             best = min(best, time.time() - t0)
             if best < 0.6:
                 reps = 4
-        timings[name] = round(best, 3)
+        timings[e.name] = round(best, 3)
         total += best
-        print(f"# {name}: {n} rows in {best:.2f}s (min of {reps})", file=sys.stderr)
+        print(f"# {e.name}: {n} rows in {best:.2f}s (min of {reps})", file=sys.stderr)
 
     # skew-stress block (north rule: explicit skew handling) — the
     # same skew-sensitive jobs on a uniform vs a pathologically skewed

@@ -97,11 +97,3 @@ def referential_orphans(
         d = F.broadcast(d)
     return facts.join(d, keys, "left_anti")
 
-
-def referential_ok(facts: DataFrame, dim: DataFrame, keys: list[str],
-                   *, broadcast_dim: bool = True) -> DataFrame:
-    """The pass set (EXISTS) — left-semi twin of orphans."""
-    d = dim.select(*keys).distinct()
-    if broadcast_dim:
-        d = F.broadcast(d)
-    return facts.join(d, keys, "left_semi")

@@ -320,20 +320,6 @@ def sample_frames(df: DataFrame, *, every_ms: int = 10_000, max_frames: int = 8,
     return videos.mapInPandas(op, schema=_FRAMES_SCHEMA)
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize placeholder: passes metadata through with the new
-    target dims recorded; payload untouched (a real implementation
-    re-encodes).  Kept builtin-only — no Python needed to adjust
-    metadata."""
-    new_meta = F.struct(
-        F.col("meta.mime").alias("mime"),
-        F.lit(width).cast("int").alias("width"),
-        F.lit(height).cast("int").alias("height"),
-        F.col("meta.duration_ms").alias("duration_ms"),
-    )
-    return df.withColumn("meta", new_meta)
-
-
 _RESIZE_SCHEMA = "media_id long, in_w int, in_h int, out_w int, out_h int, resized_sha256 string"
 
 

@@ -687,7 +687,16 @@ def iban_documents(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # Shannon character entropy marks them as machine-generated
 # credentials (API keys, tokens) rather than words or identifiers.
 # ---------------------------------------------------------------------------
-SECRET_CANDIDATE_RE = r"\b[A-Za-z0-9+/=_-]{20,64}\b"
+# Candidates are MAXIMAL runs over the charset, kept when at least 20
+# chars long, and redacted whole.  A `\b`-delimited form stops before
+# trailing base64 `=` padding (leaking it past redaction), and the
+# lookaround fix cannot run on the DuckDB oracle (RE2 has none).  No
+# upper length bound: a long run (an 88-char padded base64 key,
+# `NAME=<token>`) must still be scanned; its entropy is taken over
+# bounded windows instead (:func:`secret_entropy`).
+SECRET_RUN_RE = r"[A-Za-z0-9+/=_-]+"
+SECRET_MIN_LEN = 20
+SECRET_WINDOW = 64
 # bits/char; generated keys sit near log2(charset)≈5.2-6, English
 # words and snake_case identifiers near 3-4.  Compared on the
 # round6-rounded value so the JVM and the DuckDB oracle agree at the
@@ -698,7 +707,8 @@ SECRET_ENTROPY_BITS = 4.2
 def shannon_entropy(token: Column) -> Column:
     """Shannon entropy (bits/char) of a string column — distinct-char
     probability fold, pure Column algebra.  O(distinct·len) per value;
-    candidates are ≤64 chars so the quadratic term is bounded."""
+    callers pass ≤``SECRET_WINDOW``-char windows so the quadratic term
+    is bounded."""
     chars = F.split(token, "")
     n = F.size(chars)
     return F.aggregate(
@@ -710,25 +720,42 @@ def shannon_entropy(token: Column) -> Column:
     )
 
 
+def secret_candidates(text: Column) -> Column:
+    """array<string> of the maximal runs of ``text`` over the
+    base64/identifier charset that are at least ``SECRET_MIN_LEN``
+    chars long."""
+    runs = F.regexp_extract_all(text, F.lit(SECRET_RUN_RE), F.lit(0))
+    return F.filter(runs, lambda x: F.length(x) >= SECRET_MIN_LEN)
+
+
+def secret_entropy(run: Column) -> Column:
+    """Entropy of a candidate run, rounded to 6 decimals: the greater
+    of its first and last ``SECRET_WINDOW`` chars (one window when the
+    run is no longer), so a key at either end of a long run is seen
+    and the cost stays bounded however long the run is."""
+    wins = F.array_distinct(F.array(
+        F.substring(run, 1, SECRET_WINDOW),
+        F.substring(run, -SECRET_WINDOW, SECRET_WINDOW),
+    ))
+    return F.round(F.array_max(F.transform(wins, shannon_entropy)), 6)
+
+
 def entropy_secret_documents(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, n_secret_candidates, n_high_entropy, max_entropy,
-    redacted_digest) — candidates are word-delimited 20-64-char runs
-    over the base64/identifier charset; those whose per-char Shannon
-    entropy (rounded to 6 decimals) reaches ``SECRET_ENTROPY_BITS``
-    are counted as secrets and redacted to ``<KEY>``.  Long ordinary
-    identifiers (snake_case, camelCase) fall well under the threshold
-    and survive.  Same execution shape as the Luhn/IBAN scrubs:
-    nested higher-order functions, whole-stage codegen, zero Python,
-    zero shuffles.  No reference precedent (SURVEY.md §2.F)."""
+    redacted_digest) — candidates are :func:`secret_candidates`; those
+    whose :func:`secret_entropy` reaches
+    ``SECRET_ENTROPY_BITS`` are counted as secrets and redacted to
+    ``<KEY>``.  Long ordinary identifiers (snake_case, camelCase) fall
+    well under the threshold and survive.  Same execution shape as the
+    Luhn/IBAN scrubs: nested higher-order functions, whole-stage
+    codegen, zero Python, zero shuffles.  No reference precedent (SURVEY.md §2.F)."""
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_t"),
-        F.regexp_extract_all(
-            F.col(text_col), F.lit(SECRET_CANDIDATE_RE), F.lit(0)
-        ).alias("_cands"),
+        secret_candidates(F.col(text_col)).alias("_cands"),
     ).withColumn(
         "_ents",
-        F.transform(F.col("_cands"), lambda x: F.round(shannon_entropy(x), 6)),
+        F.transform(F.col("_cands"), secret_entropy),
     )
     high = F.expr(
         f"filter(_cands, (x, ci) -> element_at(_ents, ci + 1) >= {SECRET_ENTROPY_BITS})"
@@ -823,12 +850,10 @@ def scrub_text(df: DataFrame, text_col: str) -> DataFrame:
 
     # high-entropy keys
     out = (
-        out.withColumn(
-            "_sc_c", F.regexp_extract_all(t, F.lit(SECRET_CANDIDATE_RE), F.lit(0))
-        )
+        out.withColumn("_sc_c", secret_candidates(t))
         .withColumn(
             "_sc_e",
-            F.transform(F.col("_sc_c"), lambda x: F.round(shannon_entropy(x), 6)),
+            F.transform(F.col("_sc_c"), secret_entropy),
         )
         .withColumn(
             text_col,

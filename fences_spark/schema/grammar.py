@@ -232,25 +232,6 @@ def to_productions(grammar: Grammar, start: Union[NonTerminal, str]) -> Tuple[Pr
     return norm.prods, start_name
 
 
-def _is_recursive(prods: Productions) -> bool:
-    # cycle detection over the nonterminal dependency graph
-    WHITE, GRAY, BLACK = 0, 1, 2
-    color = {n: WHITE for n in prods}
-    def visit(n: str) -> bool:
-        color[n] = GRAY
-        for seq in prods[n]:
-            for atom in seq:
-                if atom[0] == "n":
-                    c = color[atom[1]]
-                    if c == GRAY:
-                        return True
-                    if c == WHITE and visit(atom[1]):
-                        return True
-        color[n] = BLACK
-        return False
-    return any(color[n] == WHITE and visit(n) for n in list(prods))
-
-
 # ---------------------------------------------------------------------------
 # Tier 1: acyclic grammar → regex (Java/RE2/Python common subset)
 # ---------------------------------------------------------------------------

@@ -5,20 +5,23 @@ order-insensitive value comparison (columns sorted by name, rows
 sorted).
 
 The sweep itself is importable (``sweep(spark, sf_dir)``) so the
-pytest suite runs the FULL 73-entry value comparison at sf0.001 on
-every run (tests/test_entry_contract.py) — the driver samples ~50 of
-the entries per round, so without the in-suite sweep a rotated-out
-entry could regress unnoticed for a round.
+pytest suite runs the value comparison over EVERY registry entry at
+sf0.001 on every run (tests/conftest.py ``entry_sweep``) — the driver
+samples 50 of the entries per round, so without the in-suite sweep a
+rotated-out entry could regress unnoticed for a round.  The same
+sweep records each entry's plan signature for the plan-shape gate, so
+no entry executes twice in the suite.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -41,12 +44,16 @@ def canon(rows, cols):
     return sorted(out)
 
 
-def sweep(spark, sf_dir: str, only=None, verbose: bool = True) -> list[str]:
+def sweep(spark, sf_dir: str, only=None, verbose: bool = True,
+          signatures: dict | None = None) -> list[str]:
     """Run every queries() entry and compare against its oracle.
     Returns the list of per-entry failure descriptions (empty = green).
     Entries without an oracle get the rows-only treatment (run +
-    count), mirroring the driver."""
+    count), mirroring the driver.  A ``signatures`` dict is filled with
+    each entry's plan signature, read from the plan just executed."""
     import __spark_entry__ as e
+
+    from fences_spark.plans import formatted_plan, plan_signature
 
     con = duckdb.connect()
     for t in TABLES:
@@ -60,6 +67,8 @@ def sweep(spark, sf_dir: str, only=None, verbose: bool = True) -> list[str]:
         sdf = fn(spark, sf_dir)
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
+        if signatures is not None:
+            signatures[name] = plan_signature(formatted_plan(sdf))
         if name not in oracles:
             if verbose:
                 print(f"{name}: rows-only check, {len(srows)} rows")

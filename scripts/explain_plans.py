@@ -1,8 +1,11 @@
-"""Generate PLANS.md: the physical plan for each headline query with
-the scale-relevant evidence called out — PushedFilters / ReadSchema
-(pushdown + pruning reach the parquet scan), BroadcastHashJoin (small
-dims broadcast), WholeStageCodegen spans (JVM codegen, no Python in
-the hot path), and the exchange count (shuffles).
+"""Generate PLANS.md: the physical plan of every registry entry
+(fences_spark/entry_queries.py ``ENTRIES``) with the scale-relevant
+evidence called out — PushedFilters / ReadSchema (pushdown + pruning
+reach the parquet scan), BroadcastHashJoin (small dims broadcast),
+WholeStageCodegen spans (JVM codegen, no Python in the hot path), and
+the shuffle count.  Shuffles, joins, boundary and columns come from
+``fences_spark.plans.plan_signature``, the parser the plan-shape gate
+pins.
 
 Run: python scripts/explain_plans.py [sf_dir]
 """
@@ -13,117 +16,42 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from fences_spark.plans import formatted_plan, plan_signature  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-HEADLINE = [
-    "validate_documents",
-    "violations_events_props",
-    "q1_pricing_summary",
-    "join_customer_orders",
-    "orphan_orders",
-    "dedup_exact_documents",
-    "paragraph_dedup_docs",
-    "dup_key_exemplars",
-    "stats_profile",
-    "topk_events_per_user",
-    "minhash_lsh_docs",
-    "dup_span_docs",
-    "winnow_docs",
-    "repetition_docs",
-    "curate_documents",
-    "token_topk_docs",
-    "chunk_docs",
-    "tfidf_topterms_docs",
-    "pack_docs",
-    "mix_quota_docs",
-    "asof_click_purchase",
-    "range_view_error",
-    "sessionize_events",
-    "embedding_topk",
-    "embedding_near_dup",
-    "embedding_near_dup_lsh",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "grammar_priority_orders",
-    "grammar_number_docs",
-    "openapi_requests",
-    "xsd_orders_xml",
-    "xsd_violation_paths",
-    "divergence_docs_stats",
-    "validate_dynamic_tree",
-    "near_dup_clusters",
-    "near_dup_jaccard",
-    "sample_documents",
-    "multimodal_features",
-    "multimodal_frames",
-    "validate_files_200k",
-    "openapi_responses",
-    "decontaminate_docs",
-    "redact_docs",
-    "shuffle_shard_docs",
-    "multimodal_resize",
-    "mix_interleave_docs",
-    "blocklist_docs",
-    "length_band_docs",
-    "curate_full_docs",
-    "quality_pct_docs",
-    "funnel_events",
-    "retention_events",
-    "cube_order_stats",
-    "outliers_order_price",
-    "lexdiv_docs",
-    "files_verdicts_buckets",
-    "files_violation_rows",
-    "multimodal_real_decode",
-    "json_violation_pointers",
-    "luhn_cards_docs",
-    "iban_docs",
-    "entropy_secrets_docs",
-    "surprisal_docs",
-    "json_profile_orders",
-    "stream_schema_drift_events",
-    "scrub_docs",
-    "incremental_dedup_docs",
-    "json_values_orders",
-]
+_BOUNDARY = {
+    "row_at_a_time": "BatchEvalPython (ROW-AT-A-TIME — fix!)",
+    "arrow": "ArrowEvalPython (vectorized)",
+    "map_in_pandas": "MapInPandas (Arrow-batched — the sanctioned slow path for binary decode)",
+    "none": "none (pure JVM)",
+}
 
 
 def evidence(plan: str) -> list[str]:
-    out = []
-    n_ex = len(re.findall(r"Exchange", plan))
-    n_bc = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan))
+    sig = plan_signature(plan)
     n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    pushed_nonempty = [p for p in pushed if p.strip()]
-    out.append(f"- exchanges (shuffles incl. broadcast): {n_ex}; broadcast joins: {n_bc}; "
-               f"whole-stage-codegen spans: {n_wsc}")
-    if pushed_nonempty:
-        out.append(f"- pushed filters: {'; '.join(pushed_nonempty[:3])}")
-    reads = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    if reads:
-        cols = sorted({c.split(":")[0] for r in reads for c in r.split(",") if c})
-        out.append(f"- scanned columns (pruned): {', '.join(cols[:12])}")
-    if "BatchEvalPython" in plan:
-        out.append("- python boundary: BatchEvalPython (ROW-AT-A-TIME — fix!)")
-    elif "ArrowEvalPython" in plan:
-        out.append("- python boundary: ArrowEvalPython (vectorized)")
-    elif "MapInPandas" in plan:
-        out.append("- python boundary: MapInPandas (Arrow-batched — the sanctioned "
-                   "slow path for binary decode)")
-    else:
-        out.append("- python boundary: none (pure JVM)")
+    pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
+    out = [f"- shuffle exchange mentions: {sig['exchanges']}; broadcast joins: "
+           f"{sig['broadcast_joins']}; whole-stage-codegen spans: {n_wsc}"]
+    if pushed:
+        out.append(f"- pushed filters: {'; '.join(pushed[:3])}")
+    if sig["scanned_columns"]:
+        out.append(f"- scanned columns (pruned): {', '.join(sig['scanned_columns'][:12])}")
+    out.append(f"- python boundary: {_BOUNDARY[sig['python_boundary']]}")
     return out
 
 
 def main() -> None:
-    from fences_spark.entry_queries import QUERIES
+    from fences_spark.entry_queries import ENTRIES
     from fences_spark.session import get_spark
 
     spark = get_spark(app="plans", cores=4, shuffle_partitions=8)
     lines = [
-        "# PLANS — physical-plan evidence for the headline queries",
+        "# PLANS — physical-plan evidence for every registry entry",
         "",
         f"Generated by `python scripts/explain_plans.py` at sf_dir={SF_DIR}.",
         "Evidence extracted per plan: shuffle count, broadcast joins,",
@@ -131,15 +59,11 @@ def main() -> None:
         "any Python boundary exists (only Arrow-vectorized allowed).",
         "",
     ]
-    for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
-        df = fn(spark, SF_DIR)
-        df.collect()  # execute THIS plan so AQE finalizes it in place
-        #              (df.count() would execute a different QueryExecution)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")  # noqa: SLF001
-        lines.append(f"## {name}")
+    for e in ENTRIES:
+        df = e.build(spark, SF_DIR)
+        df.collect()
+        plan = formatted_plan(df)
+        lines.append(f"## {e.name}")
         lines.extend(evidence(plan))
         lines.append("")
         lines.append("<details><summary>formatted plan</summary>")
@@ -149,7 +73,7 @@ def main() -> None:
         lines.append("```")
         lines.append("</details>")
         lines.append("")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md")
     spark.stop()

@@ -4,35 +4,29 @@ The driver's correctness gate compares ``queries()`` against
 ``oracle_sql()`` per key; a key present in ``queries()`` but missing
 from ``oracle_sql()`` silently downgrades that entry to a weaker
 rows-only check.  These tests make that downgrade impossible to do by
-accident: the rows-only set is pinned explicitly, every oracle SQL
-must parse AND execute on DuckDB over the real testdata views, and
-the surface types are checked without starting Spark (fast — the
-value-level Spark-vs-DuckDB comparison lives in
-scripts/check_oracle.py and the driver's own sweep).
+accident: every registry record (fences_spark/entry_queries.py
+``ENTRIES``) must carry an oracle or a written rows-only reason, every
+oracle SQL must parse AND execute on DuckDB over the real testdata
+views, and the surface types are checked without starting Spark (fast
+— the value-level Spark-vs-DuckDB comparison is the shared
+``entry_sweep`` fixture, tests/conftest.py).
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-
-# Entries deliberately WITHOUT an oracle (documented next to ORACLE_SQL
-# in fences_spark/entry_queries.py): non-SQL-expressible generation /
-# decode surfaces and the scale smoke.  Growing this set is a
-# deliberate act — add the key here AND document why there.
-ROWS_ONLY = {
-    "generate_confusion_fixtures",
-    "generate_cover_fixtures",
-    "multimodal_real_decode",
-    "validate_files_200k",
-}
+from conftest import CONTRACT_SF as SF_DIR
+from fences_spark.entry_queries import ENTRIES
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-SF_DIR = os.environ.get("SPARK_GRAFT_CONTRACT_SF", "/root/testdata/sf0.001")
+ROOT = os.path.join(os.path.dirname(__file__), "..")
 
 
 def test_surface_shape() -> None:
@@ -46,26 +40,26 @@ def test_surface_shape() -> None:
 
 
 def test_every_query_is_oracle_gated_or_documented_rows_only() -> None:
-    qs = set(entrymod.queries())
-    oracles = set(entrymod.oracle_sql())
-    assert oracles <= qs, f"orphan oracles without a query: {sorted(oracles - qs)}"
-    assert qs - oracles == ROWS_ONLY, (
-        "queries()/oracle_sql() key drift — a new entry without an oracle "
-        "silently weakens the driver gate to rows-only; either add the "
-        f"oracle SQL or pin the key in ROWS_ONLY: {sorted((qs - oracles) ^ ROWS_ONLY)}"
+    names = [e.name for e in ENTRIES]
+    assert len(names) == len(set(names)), "duplicate registry names"
+    bad = [e.name for e in ENTRIES
+           if bool(e.oracle and e.oracle.strip()) == bool(e.rows_only and e.rows_only.strip())]
+    assert not bad, (
+        "each registry record needs exactly one of an oracle SQL or a written "
+        f"rows-only reason: {bad}"
     )
-    assert ROWS_ONLY <= qs, f"stale ROWS_ONLY keys: {sorted(ROWS_ONLY - qs)}"
 
 
-def test_bench_headline_keys_exist() -> None:
-    """bench.py silently skips a HEADLINE name missing from QUERIES
-    (`if fn is None: continue`) — a rename would quietly shrink the
-    driver's BENCH suite instead of failing."""
-    import bench
-
-    missing = set(bench.HEADLINE) - set(entrymod.queries())
-    assert not missing, f"bench HEADLINE names not in queries(): {sorted(missing)}"
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), "duplicate HEADLINE entries"
+def test_unstamped_entries_lead_driver_window() -> None:
+    """The driver's correctness gate stamps the first 50 entries of
+    queries() per round (CORRECTNESS_r*.json); an entry none of those
+    files names has never been stamped, so it must sit in that window."""
+    stamped: set[str] = set()
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            stamped |= set(json.load(f))
+    late = [n for n in list(entrymod.queries())[50:] if n not in stamped]
+    assert not late, f"never-stamped entries outside the driver's first 50: {late}"
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata not present")
@@ -93,19 +87,12 @@ def test_every_oracle_sql_executes_on_duckdb() -> None:
     assert not bad, "oracle SQL failed on DuckDB:\n" + "\n".join(bad)
 
 
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata not present")
-def test_full_oracle_sweep_values(spark) -> None:
+def test_full_oracle_sweep_values(entry_sweep) -> None:
     """The FULL Spark-vs-DuckDB value comparison over every oracle-gated
     entry at sf0.001, every pytest run.  The driver's per-round
-    CORRECTNESS file samples only ~50 of the entries and the sample
-    rotates (r02 silently dropped simhash_docs/embedding_vector_stats),
-    so the in-suite sweep is what guarantees 73/73 — no reliance on
-    driver sampling.  The heavier sf0.01 sweep stays available as
+    CORRECTNESS file samples only 50 of the entries, so the in-suite
+    sweep is what guarantees every oracle holds — no reliance on driver
+    sampling.  The heavier sf0.01 sweep stays available as
     `python scripts/check_oracle.py`."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from check_oracle import sweep
-
-    failures = sweep(spark, SF_DIR, verbose=False)
+    failures, _ = entry_sweep
     assert not failures, f"{len(failures)} entries diverge:\n" + "\n\n".join(failures)

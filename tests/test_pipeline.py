@@ -266,6 +266,10 @@ def test_scrub_pii_stage(spark, tmp_path_factory):
         [(910001,
           "contact bob@example.com card 4532015112830366 ref 4532015112830367 "
           "iban DE89370400440532013000 key sk_FqZ93xT2mWv8LpQ7rYdK4nBjhE6u "
+          "b64 Y2kvdG9rZW49WHo4MVFtNDdMcA== "
+          "k88 pU3KGCUwux1tEyze1iN7LtkeP3IfyxlxF0SU1kk8nVw0YL4xIB5p/tqg7ui5mX9c"
+          "fCmZ/a/lkyU81lSvTfrXFA== "
+          "env SOME_LONG_SETTING_NAME=9qEwjky40UVsWmflzdE1F8ResqEDusTpkr0cStY4qWB8dWKn "
           "plus filler words so the curation quality gate keeps this document "
           "around for the packing stage of the test run today")],
         ["doc_id", "text"],
@@ -281,6 +285,9 @@ def test_scrub_pii_stage(spark, tmp_path_factory):
     assert "4532015112830366" not in text and "<CC>" in text
     assert "DE89370400440532013000" not in text and "<IBAN>" in text
     assert "sk_FqZ93xT2mWv8LpQ7rYdK4nBjhE6u" not in text and "<KEY>" in text
+    assert "b64 <KEY> " in text  # base64 padding redacted with its key
+    assert "k88 <KEY> " in text  # runs over 64 chars are scanned too
+    assert "env <KEY> " in text
     assert "4532015112830367" in text  # Luhn-failing lookalike preserved
     # the validation/curation sinks saw the ORIGINAL text (scrub is a
     # release gate on the corpus, not a rewrite of upstream evidence)

@@ -1,117 +1,60 @@
-"""Plan-shape regression gate (round-5 verdict item 7).
+"""Plan-shape regression gate.
 
 PLANS.md documents the physical plans, but nothing failed when a plan
 regressed — a broadcast silently becoming a shuffle, or a new Python
-boundary appearing in a JVM-only query.  This gate derives a compact
-signature from the AQE-final formatted plan of a headline subset and
-compares it to the pinned JSON at tests/fixtures/plan_shapes.json.
+boundary appearing in a JVM-only query.  This gate compares the
+signature (fences_spark.plans.plan_signature) of each pinned entry's
+AQE-final plan, captured by the shared in-suite sweep, with the pin at
+tests/fixtures/plan_shapes.json.  The pin records the scale factor it
+was captured at (``sf``, the data directory's name) and the gated
+entries' signatures (``signatures``, keyed by entry); a sweep at
+another scale factor cannot be compared and skips the comparison.
 
 When a plan LEGITIMATELY changes, regenerate the pin deliberately:
 
     PLAN_SHAPES_UPDATE=1 python -m pytest tests/test_plan_shapes.py -q
 
-Signature fields per entry:
-- exchanges: number of Exchange operators (shuffles + broadcasts)
-- broadcast_joins: BroadcastHashJoin/BroadcastNestedLoopJoin count
-- python_boundary: none | arrow (ArrowEvalPython) | map_in_pandas |
-  row_at_a_time (BatchEvalPython — ALWAYS a failure, never pinnable)
-- scanned_columns: union of parquet ReadSchema columns (pruning)
+That rewrites the signature of every entry the pin keys.  To gate a
+new entry, add its name under the pin's ``signatures`` (any value) and
+update.  Pin only signatures that repeat across runs: retention_events
+is left out because AQE broadcasts either side of one of its joins
+from run to run, even within one session, and the two plans differ by
+one shuffle.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import CONTRACT_SF
+
 PIN_PATH = os.path.join(os.path.dirname(__file__), "fixtures", "plan_shapes.json")
 
-# A representative cross-section: flagship north-rule entries, a
-# broadcast join, an anti join, a salted top-k, an as-of join, a
-# dedup family member, an Arrow-tier validator, and the sanctioned
-# MapInPandas boundary.
-GATED = [
-    "files_verdicts_buckets",
-    "files_violation_rows",
-    "validate_documents",
-    "q1_pricing_summary",
-    "join_customer_orders",
-    "orphan_orders",
-    "dedup_exact_documents",
-    "minhash_lsh_docs",
-    "topk_events_per_user",
-    "asof_click_purchase",
-    "mix_quota_docs",
-    "json_violation_pointers",
-    "multimodal_features",
-    "luhn_cards_docs",
-    "iban_docs",
-    "entropy_secrets_docs",
-    "surprisal_docs",
-    "json_profile_orders",
-    "scrub_docs",
-]
 
-
-def _signature(plan: str) -> dict:
-    if "BatchEvalPython" in plan:
-        boundary = "row_at_a_time"
-    elif "ArrowEvalPython" in plan:
-        boundary = "arrow"
-    elif "MapInPandas" in plan:
-        boundary = "map_in_pandas"
-    else:
-        boundary = "none"
-    reads = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    cols = sorted({c.split(":")[0].strip() for r in reads for c in r.split(",") if c})
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "broadcast_joins": len(
-            re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan)
-        ),
-        "python_boundary": boundary,
-        "scanned_columns": cols,
-    }
-
-
-@pytest.fixture(scope="module")
-def signatures(spark):
-    from fences_spark.entry_queries import QUERIES
-
-    sigs = {}
-    for name in GATED:
-        df = QUERIES[name](spark, SF_DIR)
-        df.collect()  # execute THIS plan so AQE finalizes it in place
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
-        sigs[name] = _signature(plan)
-    if os.environ.get("PLAN_SHAPES_UPDATE") == "1":
-        with open(PIN_PATH, "w") as f:
-            json.dump(sigs, f, indent=1, sort_keys=True)
-    return sigs
-
-
-def test_no_row_at_a_time_python_anywhere(signatures):
+def test_no_row_at_a_time_python_anywhere(entry_sweep):
+    _, signatures = entry_sweep
     offenders = [n for n, s in signatures.items()
                  if s["python_boundary"] == "row_at_a_time"]
     assert offenders == [], f"BatchEvalPython in hot path: {offenders}"
 
 
-def test_plan_signatures_match_pin(signatures):
-    assert os.path.exists(PIN_PATH), (
-        "no pin file — run PLAN_SHAPES_UPDATE=1 python -m pytest "
-        "tests/test_plan_shapes.py once to create it"
-    )
+def test_plan_signatures_match_pin(entry_sweep):
+    _, signatures = entry_sweep
     with open(PIN_PATH) as f:
-        pinned = json.load(f)
-    diffs = {}
-    for name in GATED:
-        if pinned.get(name) != signatures[name]:
-            diffs[name] = {"pinned": pinned.get(name), "got": signatures[name]}
+        pin = json.load(f)
+    sf = os.path.basename(os.path.realpath(CONTRACT_SF))
+    if sf != pin["sf"]:
+        pytest.skip(f"the pin records {pin['sf']} plans; the sweep ran at {sf}")
+    pinned = pin["signatures"]
+    if os.environ.get("PLAN_SHAPES_UPDATE") == "1":
+        pinned = {name: signatures[name] for name in pinned}
+        with open(PIN_PATH, "w") as f:
+            json.dump({"sf": sf, "signatures": pinned}, f, indent=1, sort_keys=True)
+    diffs = {name: {"pinned": sig, "got": signatures.get(name)}
+             for name, sig in pinned.items() if signatures.get(name) != sig}
     assert not diffs, (
         "plan shape changed — if deliberate, regenerate the pin with "
         f"PLAN_SHAPES_UPDATE=1; diffs: {json.dumps(diffs, indent=1)}"

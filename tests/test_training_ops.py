@@ -1592,6 +1592,13 @@ class TestEntropySecrets:
     """High-entropy secret detection — entropy math pinned against a
     pure-Python Shannon implementation."""
 
+    KEY88 = ("pU3KGCUwux1tEyze1iN7LtkeP3IfyxlxF0SU1kk8nVw0YL4xIB5p/tqg7ui5mX9c"
+             "fCmZ/a/lkyU81lSvTfrXFA==")
+    TOKEN48 = "9qEwjky40UVsWmflzdE1F8ResqEDusTpkr0cStY4qWB8dWKn"
+    TOKEN32 = "HfDNxSIvPZZ63fFKcZjR4I0b3jRtaWr4"
+    # 66 chars: the run's first 64 chars are all name, under the threshold
+    LONG_NAME = "the_configuration_value_for_the_primary_storage_account_access_key"
+
     @staticmethod
     def _py_entropy(s: str) -> float:
         import math
@@ -1627,6 +1634,11 @@ class TestEntropySecrets:
             (2, "var total_validation_error_count_by_bucket end"),
             (3, "pad aaaaaaaaaaaaaaaaaaaaaaaa end"),
             (4, "clean"),
+            (5, "b64 Y2kvdG9rZW49WHo4MVFtNDdMcA== end"),  # padded base64 key
+            (6, f"b64 {self.KEY88} end"),  # 88-char padded base64 key
+            (7, f"env SOME_LONG_SETTING_NAME={self.TOKEN48} end"),
+            (8, f"env {self.LONG_NAME}={self.TOKEN32} end"),  # key in tail window
+            (9, "var total_validation_error_count_by_bucket_and_by_rule_and_by_source_table end"),
         ]
         df = spark.createDataFrame(rows, "doc_id int, text string")
         out = {r["doc_id"]: r for r in
@@ -1639,6 +1651,14 @@ class TestEntropySecrets:
         assert (out[3]["n_secret_candidates"], out[3]["n_high_entropy"]) == (1, 0)
         assert out[3]["max_entropy"] == 0.0
         assert out[4]["max_entropy"] is None
+        # the `=` padding is part of the candidate, so none survives redaction
+        assert (out[5]["n_secret_candidates"], out[5]["n_high_entropy"]) == (1, 1)
+        assert out[5]["redacted_digest"] == hashlib.md5(b"b64 <KEY> end").hexdigest()
+        # runs over 64 chars are candidates too, redacted whole
+        for i, pre in ((6, b"b64"), (7, b"env"), (8, b"env")):
+            assert (out[i]["n_secret_candidates"], out[i]["n_high_entropy"]) == (1, 1), i
+            assert out[i]["redacted_digest"] == hashlib.md5(pre + b" <KEY> end").hexdigest(), i
+        assert (out[9]["n_secret_candidates"], out[9]["n_high_entropy"]) == (1, 0)
 
     def test_plan_is_pure_jvm(self, spark):
         from fences_spark.operators.text import entropy_secret_documents
