@@ -10,6 +10,10 @@ remote output_dir silently breaks the logic (os.path.isdir on an
 
 from __future__ import annotations
 
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 
@@ -56,3 +60,31 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, jsrc = _fs_and_path(spark, src)
     _, jdst = _fs_and_path(spark, dst)
     return bool(fs.rename(jsrc, jdst))
+
+
+def write_parquet_file(spark: SparkSession, dir_path: str, name: str, table: pa.Table) -> str:
+    """Write ``table`` as the single parquet file ``dir_path/name`` from
+    the driver, without a Spark job.  The bytes go to an exclusively
+    created hidden ``_tmp-`` file, which is then renamed to ``name``, so
+    readers (Spark, pyarrow: both skip ``_``/``.`` names) never see a
+    partial file.  An existing ``name`` is replaced: on filesystems whose
+    ``rename`` refuses an existing destination (HDFS) it is deleted
+    first.  Returns the written path."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, jdir = _fs_and_path(spark, dir_path)
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    jtmp = jvm.org.apache.hadoop.fs.Path(jdir, f"_tmp-{uuid.uuid4().hex}-{name}")
+    jdst = jvm.org.apache.hadoop.fs.Path(jdir, name)
+    fs.mkdirs(jdir)
+    out = fs.create(jtmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(jtmp, jdst):
+        fs.delete(jdst, False)
+        if not fs.rename(jtmp, jdst):
+            fs.delete(jtmp, False)
+            raise OSError(f"could not rename a temporary file to {jdst.toString()}")
+    return jdst.toString()

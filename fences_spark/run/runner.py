@@ -12,16 +12,26 @@ Design for 10^12 files:
   a lineage/retry grain, not a scheduling loop — looping would
   serialize the cluster).  Batching is available (``max_buckets_per_
   pass``) to bound the blast radius of a failure.
-- Sinks are parquet tables partitioned by bucket, written with
-  ``partitionOverwriteMode=dynamic`` so re-processing a bucket
-  *replaces* its output — idempotent at the bucket grain.
-- The checkpoint table records (run_id, snapshot_id, bucket, status,
-  rows, secs).  Resume = re-run with the same run_id: completed
-  buckets are skipped by an anti-join of the bucket list against the
-  checkpoint (driver-side — it is ≤ n_buckets rows).
-- Lineage per bucket: input snapshot fingerprint, rule-set hash, rows
-  in, violations out, wall seconds — enough to answer "which input
-  version produced this verdict, with which rules".
+- A pass writes ``violations`` with Spark: exact failing (row, rule)
+  rows, partitioned by bucket; the pass's bucket partitions are dropped
+  first and ``partitionOverwriteMode=dynamic`` replaces them.  It then
+  collects its per-bucket aggregate once (≤ n_buckets rows) and the
+  driver writes ``verdicts``, ``metrics`` and ``checkpoint`` as ONE
+  parquet file each (``fsutil.write_parquet_file``, no Spark job), in
+  that order: the checkpoint file commits the pass.
+- Per-pass files are named from (run_id, snapshot_id, first bucket).
+  A crash before the commit leaves the pass pending, so the redo starts
+  at the same bucket and replaces the uncommitted files, whatever its
+  ``max_buckets_per_pass``.  A run with no bucket done yet empties
+  ``verdicts`` first, so it holds the latest verdict per bucket.
+- The checkpoint (run_id, snapshot_id, bucket, status, rows,
+  pass_secs) lives under ``ledger_dir`` (default ``output_dir``).
+  Resume = re-run with the same run_id: done buckets are skipped
+  (driver-side anti-join, ≤ n_buckets rows per run).
+- Lineage per bucket (``metrics``): input snapshot fingerprint,
+  rule-set hash, rows in, invalid rows, wall seconds of the whole
+  pass — enough to answer "which input version produced this
+  verdict, with which rules".
 """
 
 from __future__ import annotations
@@ -30,11 +40,25 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from fences_spark import fsutil
 from fences_spark.compiler.ruleset import RuleSet
+
+# Driver-written sinks; verdicts keeps the column order of the old
+# bucket-partitioned table (bucket last).  pass_secs is the wall of
+# the whole pass, repeated on each of its buckets.
+VERDICTS = pa.schema([("rows", pa.int64()), ("rule_id", pa.string()), ("n_pass", pa.int64()),
+                      ("n_fail", pa.int64()), ("passed", pa.bool_()), ("bucket", pa.int32())])
+METRICS = pa.schema([("run_id", pa.string()), ("snapshot_id", pa.string()),
+                     ("bucket", pa.int32()), ("rows", pa.int64()), ("rows_invalid", pa.int64()),
+                     ("pass_secs", pa.float64()), ("lineage_json", pa.string())])
+CHECKPOINT = pa.schema([("run_id", pa.string()), ("snapshot_id", pa.string()),
+                        ("bucket", pa.int32()), ("status", pa.string()), ("rows", pa.int64()),
+                        ("pass_secs", pa.float64())])
 
 
 @dataclass
@@ -54,6 +78,10 @@ class RunConfig:
     # rows that already failed the boolean tier, so the extra cost
     # scales with the defect rate, not the corpus.
     pointer_diagnostics: bool = False
+    # Directory of the checkpoint ledger; None = output_dir.
+    # run_incremental keeps one ledger at the table grain while each
+    # snapshot's other sinks go to their own subdirectory.
+    ledger_dir: str | None = None
 
     @property
     def violations_path(self) -> str:
@@ -69,7 +97,7 @@ class RunConfig:
 
     @property
     def checkpoint_path(self) -> str:
-        return os.path.join(self.output_dir, "checkpoint")
+        return os.path.join(self.ledger_dir or self.output_dir, "checkpoint")
 
 
 def _ruleset_hash(rs: RuleSet) -> str:
@@ -140,6 +168,8 @@ class ValidationRunner:
         )
         if not pending:
             return summary
+        if not done:
+            fsutil.delete(self.spark, cfg.verdicts_path)
 
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         t0 = time.time()
@@ -153,25 +183,21 @@ class ValidationRunner:
         return summary
 
     # ------------------------------------------------------------------
-    def _clear_bucket_partitions(self, path: str, buckets: list[int]) -> None:
+    def _pass_file(self, first_bucket: int) -> str:
+        key = hashlib.sha256(f"{self.cfg.run_id}\0{self.cfg.snapshot_id}".encode())
+        return f"pass-{key.hexdigest()[:16]}-b{first_bucket:05d}.parquet"
+
+    def _clear_violation_buckets(self, buckets: list[int]) -> None:
         """Dynamic partition overwrite only replaces partitions that
         appear in the NEW data — a re-processed bucket whose new
         result is empty (e.g. zero violations after a crash-resume)
-        would otherwise keep its stale files.  Explicitly drop the
-        batch's partitions first (Hadoop FS API — works on any
-        Hadoop-compatible FS; the Iceberg sink's overwritePartitions
-        subsumes this)."""
-        jvm = self.spark.sparkContext._jvm  # noqa: SLF001
-        jsc = self.spark.sparkContext._jsc  # noqa: SLF001
-        conf = jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            return
-        for b in buckets:
-            bp = jvm.org.apache.hadoop.fs.Path(path, f"bucket={b}")
-            if fs.exists(bp):
-                fs.delete(bp, True)
+        would otherwise keep its stale files.  Drop the batch's
+        partitions first, through the Hadoop FS API (any
+        Hadoop-compatible FS)."""
+        path = self.cfg.violations_path
+        if fsutil.exists(self.spark, path):
+            for b in buckets:
+                fsutil.delete(self.spark, os.path.join(path, f"bucket={b}"))
 
     def _run_batch(self, df_b: DataFrame, buckets: list[int], summary: RunSummary) -> None:
         cfg = self.cfg
@@ -214,75 +240,60 @@ class ValidationRunner:
                 "bucket", *keep, F.col("content_sha256"),
                 F.explode("violations").alias("rule_id"),
             )
-        self._clear_bucket_partitions(cfg.violations_path, buckets)
+        self._clear_violation_buckets(buckets)
         viol.write.mode("overwrite").partitionBy("bucket").parquet(cfg.violations_path)
 
-        # verdicts: (bucket, rule_id, n_pass, n_fail, passed)
+        # per-bucket aggregate, collected once (≤ n_buckets rows);
+        # verdicts, metrics and checkpoint are all built from it.
+        # violation_rows counts EXPLODED (row, rule) violation rows —
+        # a row breaking k rules contributes k — matching exactly what
+        # the violations sink wrote; rows_invalid counts rows.
         agg_exprs = []
         for rid in res.rule_ids:
             agg_exprs.append(F.sum(F.col(rid).cast("long")).alias(f"{rid}__pass"))
             agg_exprs.append(F.sum((~F.col(rid)).cast("long")).alias(f"{rid}__fail"))
-        # persist: the aggregate is ≤ n_buckets rows, but it sits on a
-        # full input scan — without it the verdicts write AND the
-        # metrics collect below would each re-scan the input (a third
-        # full pass at 10^12-row scale)
-        # violation_rows counts EXPLODED (row, rule) violation rows —
-        # a row breaking k rules contributes k — matching exactly what
-        # the violations sink wrote; rows_invalid counts rows.
-        per_bucket = annotated.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum((~F.col("row_valid")).cast("long")).alias("rows_invalid"),
-            F.sum(F.size("violations")).alias("violation_rows"),
-            *agg_exprs,
-        ).persist()
-        stack = ", ".join(f"'{rid}', {rid}__pass, {rid}__fail" for rid in res.rule_ids)
-        verdicts = per_bucket.selectExpr(
-            "bucket",
-            "rows",
-            f"stack({len(res.rule_ids)}, {stack}) as (rule_id, n_pass, n_fail)",
-        ).withColumn("passed", F.col("n_fail") == 0)
-        self._clear_bucket_partitions(cfg.verdicts_path, buckets)
-        verdicts.write.mode("overwrite").partitionBy("bucket").parquet(cfg.verdicts_path)
-
-        # metrics + lineage per bucket (driver-collected: ≤ n_buckets rows)
-        stats = per_bucket.select(
-            "bucket", "rows", "rows_invalid", "violation_rows"
-        ).collect()
-        per_bucket.unpersist()
-        secs = time.time() - t0
-        seen = {r["bucket"] for r in stats}
-        lineage = {
+        stats = {
+            r["bucket"]: r
+            for r in annotated.groupBy("bucket").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum((~F.col("row_valid")).cast("long")).alias("rows_invalid"),
+                F.sum(F.size("violations")).alias("violation_rows"),
+                *agg_exprs,
+            ).collect()
+        }
+        pass_secs = time.time() - t0
+        lineage = json.dumps({
             "snapshot_id": cfg.snapshot_id,
             "rules_hash": self.rules_hash,
             "rule_ids": res.rule_ids,
             "tiers": res.tiers,
-        }
-        metric_rows = []
-        cp_rows = []
+        })
+        verdicts, metrics, ledger = [], [], []
         for b in buckets:
-            row = next((r for r in stats if r["bucket"] == b), None)
-            n_rows = row["rows"] if row else 0
-            n_inv = row["rows_invalid"] if row else 0
-            metric_rows.append(
-                (cfg.run_id, cfg.snapshot_id, int(b), int(n_rows), int(n_inv),
-                 float(secs), json.dumps(lineage))
-            )
-            cp_rows.append((cfg.run_id, cfg.snapshot_id, int(b), "done", int(n_rows), float(secs)))
-            if b in seen:
-                summary.rows_processed += int(n_rows)
+            r = stats.get(b)
+            n_rows = r["rows"] if r else 0
+            if r:  # a bucket with no rows has no verdicts
+                for rid in res.rule_ids:
+                    n_fail = r[f"{rid}__fail"]
+                    verdicts.append({"rows": n_rows, "rule_id": rid, "n_pass": r[f"{rid}__pass"],
+                                     "n_fail": n_fail, "passed": n_fail == 0, "bucket": b})
+            ids = {"run_id": cfg.run_id, "snapshot_id": cfg.snapshot_id, "bucket": b}
+            metrics.append({**ids, "rows": n_rows, "rows_invalid": r["rows_invalid"] if r else 0,
+                            "pass_secs": pass_secs, "lineage_json": lineage})
+            ledger.append({**ids, "status": "done", "rows": n_rows, "pass_secs": pass_secs})
+        summary.rows_processed += sum(r["rows"] for r in stats.values())
         summary.buckets_processed += len(buckets)
-        summary.violations_written += sum(r["violation_rows"] for r in stats)
+        summary.violations_written += sum(r["violation_rows"] for r in stats.values())
 
-        self.spark.createDataFrame(
-            metric_rows,
-            "run_id string, snapshot_id string, bucket int, rows long, "
-            "rows_invalid long, secs double, lineage_json string",
-        ).write.mode("append").parquet(cfg.metrics_path)
-        self.spark.createDataFrame(
-            cp_rows,
-            "run_id string, snapshot_id string, bucket int, status string, "
-            "rows long, secs double",
-        ).write.mode("append").parquet(cfg.checkpoint_path)
+        # checkpoint last: it commits the pass
+        name = self._pass_file(buckets[0])
+        for path, rows, schema in (
+            (cfg.verdicts_path, verdicts, VERDICTS),
+            (cfg.metrics_path, metrics, METRICS),
+            (cfg.checkpoint_path, ledger, CHECKPOINT),
+        ):
+            fsutil.write_parquet_file(self.spark, path, name,
+                                      pa.Table.from_pylist(rows, schema=schema))
 
 
 # ---------------------------------------------------------------------------
@@ -346,10 +357,11 @@ def run_incremental(
       run_id ``incr_<current>`` so the checkpoint table records the
       new snapshot's buckets independently of the old run's.
 
-    Violations/verdicts land in per-snapshot subdirectories of
-    ``output_dir`` (append-only history, mirroring the input's
-    snapshot chain); metrics/checkpoint stay shared so lineage is one
-    table across the chain.
+    Violations/verdicts/metrics land in per-snapshot subdirectories
+    of ``output_dir`` (append-only history, mirroring the input's
+    snapshot chain); the checkpoint is written straight to the one
+    ledger at the table grain (``ledger_dir``), which
+    ``last_validated_snapshot`` reads across the chain.
     """
     from fences_spark.sources import read_table, snaplog
 
@@ -388,25 +400,10 @@ def run_incremental(
         )
     cfg = RunConfig(
         output_dir=os.path.join(output_dir, f"snap-{current}"),
+        ledger_dir=output_dir,
         run_id=run_id or f"incr_{current}",
         snapshot_id=current,
         n_buckets=n_buckets,
         **cfg_kwargs,
     )
-    # shared lineage: metrics + checkpoint live at the table grain
-    runner = ValidationRunner(spark, ruleset, cfg)
-    summary = runner.run(df)
-    from fences_spark import fsutil
-
-    for name in ("metrics", "checkpoint"):
-        src = os.path.join(cfg.output_dir, name)
-        dst = os.path.join(output_dir, name)
-        # precise guard for "empty run wrote nothing"; a real write
-        # failure (permissions, disk) must propagate — swallowing it
-        # would leave the snapshot permanently incomplete with no
-        # signal, re-walking the same range on every resume.  The
-        # existence check goes through the Hadoop FS API so remote
-        # (hdfs://, s3a://) output_dirs behave like local ones.
-        if fsutil.exists(spark, src):
-            spark.read.parquet(src).write.mode("append").parquet(dst)
-    return summary
+    return ValidationRunner(spark, ruleset, cfg).run(df)

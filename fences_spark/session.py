@@ -12,6 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """A third of the box's memory, capped at 16g; 16g when
+    ``MemTotal`` cannot be read.  16g, not the whole box: an oversized
+    G1 heap spends most of its time in kernel page-zeroing as regions
+    uncommit/recommit (measured on a 32-core host: a 48g heap gave
+    50-94% system CPU and ran 3× slower).  A third leaves room for the
+    Python workers and for what the JVM keeps outside its heap: on a
+    15 GB box a 16g heap grew until the kernel killed the JVM.
+    Executors on a real cluster are sized to their share, never the
+    machine."""
+    cap_mb = 16 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, kb // 3 // 1024)}m"
+
+
 def get_spark(
     app: str = "fences_spark",
     cores: int | None = None,
@@ -31,12 +50,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # 16g, not the whole box: an oversized G1 heap spends most of
-        # its time in kernel page-zeroing as regions uncommit/recommit
-        # (measured on this host: 48g heap → 50-94% system CPU and 3×
-        # slower at 32 cores).  Executors on a real cluster are sized
-        # to their share, never the machine.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

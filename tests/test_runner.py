@@ -1,13 +1,18 @@
 """Runner: verdict/violation sinks, checkpoint, resume-skips-done,
-idempotent bucket overwrite, lineage."""
+idempotent bucket overwrite, lineage, crash-resume of the
+driver-written sinks."""
 
 from __future__ import annotations
 
 import json
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from fences_spark import fsutil
 from fences_spark.flagship import files_ruleset
 from fences_spark.run import RunConfig, ValidationRunner
 from fences_spark.synth import expected_defect_counts, files_table
@@ -128,6 +133,84 @@ def test_reprocessed_bucket_clears_stale_violations(spark, cfg):
     except Exception:
         n = 0  # all bucket partitions cleared → no parquet files at all
     assert n == 0
+
+
+def test_new_snapshot_rerun_keeps_only_new_verdicts(spark, cfg):
+    """verdicts holds the latest verdict per bucket: a fresh run into
+    the same output_dir empties it, while metrics keep both runs."""
+    ValidationRunner(spark, files_ruleset(), cfg).run(files_table(spark, N))
+    cfg2 = RunConfig(output_dir=cfg.output_dir, run_id="r1", snapshot_id="snapB",
+                     n_buckets=cfg.n_buckets)
+    s = ValidationRunner(spark, files_ruleset(), cfg2).run(
+        files_table(spark, N, with_defects=False))
+    v = spark.read.parquet(cfg.verdicts_path)
+    assert v.columns == ["rows", "rule_id", "n_pass", "n_fail", "passed", "bucket"]
+    assert v.count() == cfg.n_buckets * 5 and v.filter(~F.col("passed")).count() == 0
+    assert v.filter(F.col("rule_id") == "lang_enum").agg(F.sum("rows")).first()[0] == s.rows_processed
+    m = spark.read.parquet(cfg.metrics_path)
+    assert sorted(r[0] for r in m.groupBy("snapshot_id").count().collect()) == ["snapA", "snapB"]
+
+
+def _crash_after(monkeypatch, sink: str, nth: int) -> None:
+    """Make the driver-side sink writer raise right after its nth
+    file lands in ``sink`` (the file is written, the pass is not
+    committed)."""
+    real = fsutil.write_parquet_file
+    seen = []
+
+    def write(spark, dir_path, name, table):
+        out = real(spark, dir_path, name, table)
+        if os.path.basename(dir_path) == sink:
+            seen.append(name)
+            if len(seen) == nth:
+                raise RuntimeError(f"crash after {sink} write")
+        return out
+
+    monkeypatch.setattr(fsutil, "write_parquet_file", write)
+
+
+@pytest.mark.parametrize("sink, resume_step", [
+    ("verdicts", 3), ("metrics", 3), ("verdicts", 2), ("metrics", 5),
+])
+def test_crash_after_sink_write_resumes_without_duplicates(spark, cfg, monkeypatch,
+                                                           sink, resume_step):
+    """A crash after the verdicts or metrics file of the second pass
+    (buckets 3-5), before its checkpoint: the resume, with the same or
+    another ``max_buckets_per_pass``, leaves one verdicts row per
+    (bucket, rule) and one metrics row per bucket, with a one-pass
+    run's counts."""
+    files = files_table(spark, N)
+    cfg.max_buckets_per_pass = 3
+    with monkeypatch.context() as mp:
+        _crash_after(mp, sink, 2)
+        with pytest.raises(RuntimeError, match="crash after"):
+            ValidationRunner(spark, files_ruleset(), cfg).run(files)
+    cfg.max_buckets_per_pass = resume_step
+    s = ValidationRunner(spark, files_ruleset(), cfg).run(files)
+    assert (s.buckets_skipped, s.buckets_processed) == (3, 5)
+
+    v = spark.read.parquet(cfg.verdicts_path)
+    assert v.count() == v.select("bucket", "rule_id").distinct().count() == 8 * 5
+    m = spark.read.parquet(cfg.metrics_path)
+    assert m.count() == m.select("bucket").distinct().count() == 8
+    exp = expected_defect_counts(N)
+    fails = {r[0]: r[1] for r in v.groupBy("rule_id").agg(F.sum("n_fail")).collect()}
+    assert fails["lang_enum"] == exp["bad_lang"]
+    assert fails["content_present"] == exp["null_content"] + exp["empty_content"]
+    assert m.agg(F.sum("rows")).first()[0] == N + exp["dup_keys"]
+
+
+def test_write_parquet_file_round_trips_through_file_uri(spark, tmp_path):
+    """The driver-side writer resolves a ``file://`` URI through the
+    Hadoop FS, replaces an existing file of the same name, and leaves
+    no ``_tmp-`` file behind."""
+    uri = (tmp_path / "t").as_uri()
+    fsutil.write_parquet_file(spark, uri, "x.parquet", pa.table({"a": [1, 2]}))
+    path = fsutil.write_parquet_file(spark, uri, "x.parquet", pa.table({"a": [3]}))
+    assert path.endswith("/t/x.parquet")
+    assert pq.read_table(str(tmp_path / "t")).to_pylist() == [{"a": 3}]
+    assert [r["a"] for r in spark.read.parquet(uri).collect()] == [3]
+    assert not [n for n in os.listdir(tmp_path / "t") if "_tmp-" in n]
 
 
 def test_bucket_is_content_defined(spark, cfg):

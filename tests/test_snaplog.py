@@ -18,6 +18,10 @@ pinned two ways:
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -195,6 +199,32 @@ def test_run_incremental_one_call_resume(spark, tmp_path):
     # lineage is one table across the chain
     cp = spark.read.parquet(str(tmp_path / "out" / "checkpoint"))
     assert {r["snapshot_id"] for r in cp.select("snapshot_id").distinct().collect()} == {a, b}
+
+
+def test_run_incremental_commits_to_the_table_grain_ledger(spark, tmp_path):
+    """run_incremental writes its checkpoint straight to the one ledger
+    at the table grain (no per-snapshot copy): each snapshot's 64
+    buckets appear there exactly once, and no snap-*/checkpoint
+    exists; metrics stay per snapshot."""
+    from fences_spark.compiler.ruleset import RuleSet
+    from fences_spark.run.runner import run_incremental
+    from fences_spark.synth import LANGS
+
+    root, out = str(tmp_path / "tbl"), str(tmp_path / "out")
+    full = files_table(spark, 600)
+    in_b = F.pmod(F.xxhash64("path"), F.lit(3)) == 0
+    rules = RuleSet().add("lang_enum", "lang", {"enum": LANGS})
+    snaps = []
+    for part in (full.filter(~in_b), full.filter(in_b)):
+        snaps.append(snaplog.append(spark, root, part))
+        assert run_incremental(spark, rules, root, out).buckets_processed == 64
+
+    assert glob.glob(os.path.join(out, "snap-*", "checkpoint")) == []
+    assert len(glob.glob(os.path.join(out, "snap-*", "metrics"))) == 2
+    cp = pq.read_table(os.path.join(out, "checkpoint")).to_pylist()
+    for snap in snaps:
+        assert sorted(r["bucket"] for r in cp if r["snapshot_id"] == snap) == list(range(64))
+    assert len(cp) == 128
 
 
 def test_append_type_mismatch_raises(spark, tmp_path):
