@@ -62,16 +62,14 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(jsrc, jdst))
 
 
-def write_parquet_file(spark: SparkSession, dir_path: str, name: str, table: pa.Table) -> str:
-    """Write ``table`` as the single parquet file ``dir_path/name`` from
-    the driver, without a Spark job.  The bytes go to an exclusively
-    created hidden ``_tmp-`` file, which is then renamed to ``name``, so
-    readers (Spark, pyarrow: both skip ``_``/``.`` names) never see a
-    partial file.  An existing ``name`` is replaced: on filesystems whose
+def write_file(spark: SparkSession, dir_path: str, name: str, data: bytes) -> str:
+    """Write ``data`` as the single file ``dir_path/name`` from the
+    driver, without a Spark job.  The bytes go to an exclusively created
+    hidden ``_tmp-`` file, which is then renamed to ``name``, so readers
+    (Spark, pyarrow: both skip ``_``/``.`` names) never see a partial
+    file.  An existing ``name`` is replaced: on filesystems whose
     ``rename`` refuses an existing destination (HDFS) it is deleted
     first.  Returns the written path."""
-    buf = pa.BufferOutputStream()
-    pq.write_table(table, buf)
     fs, jdir = _fs_and_path(spark, dir_path)
     jvm = spark.sparkContext._jvm  # noqa: SLF001
     jtmp = jvm.org.apache.hadoop.fs.Path(jdir, f"_tmp-{uuid.uuid4().hex}-{name}")
@@ -79,7 +77,7 @@ def write_parquet_file(spark: SparkSession, dir_path: str, name: str, table: pa.
     fs.mkdirs(jdir)
     out = fs.create(jtmp, False)
     try:
-        out.write(buf.getvalue().to_pybytes())
+        out.write(data)
     finally:
         out.close()
     if not fs.rename(jtmp, jdst):
@@ -88,3 +86,34 @@ def write_parquet_file(spark: SparkSession, dir_path: str, name: str, table: pa.
             fs.delete(jtmp, False)
             raise OSError(f"could not rename a temporary file to {jdst.toString()}")
     return jdst.toString()
+
+
+def write_parquet_file(spark: SparkSession, dir_path: str, name: str, table: pa.Table) -> str:
+    """``table`` as the parquet file ``dir_path/name`` (``write_file``)."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    return write_file(spark, dir_path, name, buf.getvalue().to_pybytes())
+
+
+def read_parquet(spark: SparkSession, dir_path: str) -> pa.Table | None:
+    """The inverse of ``write_parquet_file``: every visible file directly
+    under ``dir_path`` (names not starting with ``_`` or ``.``), read on
+    the driver without a Spark job and decoded with pyarrow as one
+    table.  None when no file is visible (the directory is missing, or
+    holds only a writer's hidden ``_tmp-`` file); a visible file that is
+    not parquet raises."""
+    fs, jdir = _fs_and_path(spark, dir_path)
+    if not fs.exists(jdir):
+        return None
+    io = spark.sparkContext._jvm.org.apache.commons.io.IOUtils  # noqa: SLF001
+    tables = []
+    for st in sorted(fs.listStatus(jdir), key=lambda st: st.getPath().getName()):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        inp = fs.open(st.getPath())
+        try:
+            data = io.toByteArray(inp)
+        finally:
+            inp.close()
+        tables.append(pq.read_table(pa.BufferReader(data)))
+    return pa.concat_tables(tables) if tables else None

@@ -249,7 +249,6 @@ def weighted_interleave(
 
 def quality_percentiles(
     df: DataFrame, id_col: str, text_col: str, strata_col: str,
-    *, materialize: bool = False,
 ) -> DataFrame:
     """(doc_id, stratum, quality, pct) — each document's quality
     PERCENTILE WITHIN ITS STRATUM (language/source): the
@@ -280,39 +279,24 @@ def quality_percentiles(
     only within a bin).  Max reducer load: rows(stratum)/buckets for
     the window; the offsets relation is |strata|×buckets rows,
     broadcast (drop the hint if strata cardinality is extreme).  The
-    quality expression is evaluated on both branches —
-    ``materialize=True`` persists the narrow (id, stratum, quality,
-    bucket) projection (memory + disk spill, no document text) so the
-    corpus is scanned and scored ONCE, the right trade at 100 TB for a
-    one-shot batch job.  The cache is NOT auto-released (there is no
-    sound point to unpersist inside a lazy plan): a long-lived session
-    calling this repeatedly owns the lifecycle —
-    ``spark.catalog.clearCache()`` between runs, or keep the plan-pure
-    default.  pct for a single-row stratum is 0.0 (percent_rank's
-    convention).
+    quality expression is evaluated on both branches; to scan and score
+    the corpus ONCE use ``quality_percentiles_staged``.  pct for a
+    single-row stratum is 0.0 (percent_rank's convention).
     Skew-gated in fences_spark.skewbench (stratum_percentile row).
     """
-    base = _percentile_base(df, id_col, text_col, strata_col)
-    if materialize:
-        # ONE text scan / quality evaluation: both branches below
-        # consume the narrow (doc_id, stratum, quality, b) projection —
-        # ~30 bytes/row, no document text — so materializing it
-        # (memory, disk spill) beats re-scanning the corpus twice at
-        # 100 TB; plan-pure two-scan mode stays the default for the
-        # oracle/bench path
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    return _assemble_percentiles(base)
+    return _assemble_percentiles(_percentile_base(df, id_col, text_col, strata_col))
 
 
 def quality_percentiles_staged(
     df: DataFrame, id_col: str, text_col: str, strata_col
 ):
-    """``quality_percentiles(materialize=True)`` with an OWNED cache
-    lifecycle: returns ``(result, release)`` where ``release()``
-    unpersists the staged narrow projection once the caller's action
-    (a parquet write, a collect) has completed.  This is the form a
+    """``quality_percentiles`` over a persisted narrow (doc_id, stratum,
+    quality, b) projection — ~30 bytes/row, no document text, memory
+    with disk spill — so both branches read it and the corpus is
+    scanned and scored ONCE, the right trade at 100 TB.  Returns
+    ``(result, release)`` where ``release()`` unpersists the staged
+    projection once the caller's action (a parquet write, a collect)
+    has completed.  This is the form a
     pipeline that owns the session should use — one corpus scan, no
     cache left behind (run/pipeline.py wires it for the quality-band
     stage).  ``strata_col`` may be a column name or a Column
@@ -361,8 +345,8 @@ def _percentile_base(
 
 def _assemble_percentiles(base: DataFrame) -> DataFrame:
     """Bucket-offset exact rank over a (doc_id, stratum, quality, b)
-    frame — the skew-bounded assembly shared by the plan-pure,
-    materialized, and staged entry points."""
+    frame — the skew-bounded assembly shared by the plan-pure and
+    staged entry points."""
     from pyspark.sql import Window
 
     woff = Window.partitionBy("stratum").orderBy("b").rowsBetween(

@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from fences_spark import fsutil
+
 
 @dataclass
 class PipelineConfig:
@@ -82,19 +84,6 @@ class PipelineConfig:
 
     def stage_root(self, name: str) -> str:
         return os.path.join(self.output_dir, "stages", name)
-
-
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Scheme-agnostic small-file write through the Hadoop FileSystem
-    (local, hdfs://, s3a://, ... — wherever the parquet sinks went)."""
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
 
 
 def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> dict:
@@ -288,8 +277,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig) -> d
     }
     if kept_after_quality is not None:
         summary["kept_after_quality_band"] = kept_after_quality
-    _write_text(spark, cfg.path("summary.json"),
-                json.dumps(summary, indent=1, sort_keys=True))
+    fsutil.write_file(spark, cfg.output_dir, "summary.json",
+                      json.dumps(summary, indent=1, sort_keys=True).encode())
     for df_ in persisted:
         df_.unpersist()
     return summary

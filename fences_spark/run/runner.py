@@ -12,22 +12,27 @@ Design for 10^12 files:
   a lineage/retry grain, not a scheduling loop — looping would
   serialize the cluster).  Batching is available (``max_buckets_per_
   pass``) to bound the blast radius of a failure.
-- A pass writes ``violations`` with Spark: exact failing (row, rule)
-  rows, partitioned by bucket; the pass's bucket partitions are dropped
-  first and ``partitionOverwriteMode=dynamic`` replaces them.  It then
-  collects its per-bucket aggregate once (≤ n_buckets rows) and the
-  driver writes ``verdicts``, ``metrics`` and ``checkpoint`` as ONE
-  parquet file each (``fsutil.write_parquet_file``, no Spark job), in
-  that order: the checkpoint file commits the pass.
-- Per-pass files are named from (run_id, snapshot_id, first bucket).
-  A crash before the commit leaves the pass pending, so the redo starts
-  at the same bucket and replaces the uncommitted files, whatever its
+- Every sink holds one output per pass, named from (run_id,
+  snapshot_id, first bucket) as ``pass-<hash>-b<first bucket>``.  A
+  pass writes ``violations/pass=<name>/`` with Spark (exact failing
+  (row, rule) rows, ``bucket`` a column, ``mode("overwrite")``).  It
+  then collects its per-bucket aggregate once (≤ n_buckets rows) and
+  the driver writes ``<name>.parquet`` into ``verdicts``, ``metrics``
+  and ``checkpoint`` (``fsutil.write_parquet_file``, no Spark job), in
+  that order: the checkpoint file commits the pass.  The ``pass=``
+  form lets Spark discover the files (readers gain a ``pass`` column);
+  the caller's session conf is never touched.
+- A crash before the commit leaves the pass pending, so the redo starts
+  at the same bucket and replaces the uncommitted outputs, whatever its
   ``max_buckets_per_pass``.  A run with no bucket done yet empties
-  ``verdicts`` first, so it holds the latest verdict per bucket.
+  ``verdicts`` and ``violations`` first, so they hold the latest result
+  per bucket.
 - The checkpoint (run_id, snapshot_id, bucket, status, rows,
   pass_secs) lives under ``ledger_dir`` (default ``output_dir``).
-  Resume = re-run with the same run_id: done buckets are skipped
-  (driver-side anti-join, ≤ n_buckets rows per run).
+  Resume = re-run with the same run_id: done buckets are skipped.  The
+  ledger is ≤ runs × n_buckets rows, read on the driver with pyarrow
+  (``fsutil.read_parquet``, no Spark job); only a ledger with no file
+  means "nothing done", any other read error raises.
 - Lineage per bucket (``metrics``): input snapshot fingerprint,
   rule-set hash, rows in, invalid rows, wall seconds of the whole
   pass — enough to answer "which input version produced this
@@ -97,7 +102,21 @@ class RunConfig:
 
     @property
     def checkpoint_path(self) -> str:
-        return os.path.join(self.ledger_dir or self.output_dir, "checkpoint")
+        return _checkpoint_path(self.ledger_dir or self.output_dir)
+
+
+def _checkpoint_path(ledger_dir: str) -> str:
+    return os.path.join(ledger_dir, "checkpoint")
+
+
+def _done_buckets(spark: SparkSession, checkpoint_path: str) -> list[tuple[str, str, int]]:
+    """(run_id, snapshot_id, bucket) of every bucket the ledger marks
+    done; empty when no ledger file was written."""
+    ledger = fsutil.read_parquet(spark, checkpoint_path)
+    if ledger is None:
+        return []
+    return [(r["run_id"], r["snapshot_id"], r["bucket"])
+            for r in ledger.to_pylist() if r["status"] == "done"]
 
 
 def _ruleset_hash(rs: RuleSet) -> str:
@@ -125,24 +144,6 @@ class ValidationRunner:
         self.cfg = cfg
         self.rules_hash = _ruleset_hash(ruleset)
 
-    # ------------------------------------------------------------------
-    def _completed_buckets(self) -> set[int]:
-        try:
-            cp = self.spark.read.parquet(self.cfg.checkpoint_path)
-        except Exception:
-            return set()
-        rows = (
-            cp.filter(
-                (F.col("run_id") == self.cfg.run_id)
-                & (F.col("snapshot_id") == self.cfg.snapshot_id)
-                & (F.col("status") == "done")
-            )
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        return {r["bucket"] for r in rows}
-
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
             "bucket",
@@ -153,7 +154,8 @@ class ValidationRunner:
     # ------------------------------------------------------------------
     def run(self, files: DataFrame) -> RunSummary:
         cfg = self.cfg
-        done = self._completed_buckets()
+        done = {b for run_id, snapshot_id, b in _done_buckets(self.spark, cfg.checkpoint_path)
+                if (run_id, snapshot_id) == (cfg.run_id, cfg.snapshot_id)}
         all_buckets = list(range(cfg.n_buckets))
         pending = [b for b in all_buckets if b not in done]
         summary = RunSummary(
@@ -170,8 +172,8 @@ class ValidationRunner:
             return summary
         if not done:
             fsutil.delete(self.spark, cfg.verdicts_path)
+            fsutil.delete(self.spark, cfg.violations_path)
 
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         t0 = time.time()
         step = cfg.max_buckets_per_pass or len(pending)
         df_b = self._with_bucket(files)
@@ -183,21 +185,9 @@ class ValidationRunner:
         return summary
 
     # ------------------------------------------------------------------
-    def _pass_file(self, first_bucket: int) -> str:
+    def _pass_name(self, first_bucket: int) -> str:
         key = hashlib.sha256(f"{self.cfg.run_id}\0{self.cfg.snapshot_id}".encode())
-        return f"pass-{key.hexdigest()[:16]}-b{first_bucket:05d}.parquet"
-
-    def _clear_violation_buckets(self, buckets: list[int]) -> None:
-        """Dynamic partition overwrite only replaces partitions that
-        appear in the NEW data — a re-processed bucket whose new
-        result is empty (e.g. zero violations after a crash-resume)
-        would otherwise keep its stale files.  Drop the batch's
-        partitions first, through the Hadoop FS API (any
-        Hadoop-compatible FS)."""
-        path = self.cfg.violations_path
-        if fsutil.exists(self.spark, path):
-            for b in buckets:
-                fsutil.delete(self.spark, os.path.join(path, f"bucket={b}"))
+        return f"pass-{key.hexdigest()[:16]}-b{first_bucket:05d}"
 
     def _run_batch(self, df_b: DataFrame, buckets: list[int], summary: RunSummary) -> None:
         cfg = self.cfg
@@ -213,8 +203,8 @@ class ValidationRunner:
             F.sha2(F.col("content"), 256) if "content" in part.columns else F.lit(None).cast("string"),
         )
 
-        # violations: exact rows, partitioned by bucket (idempotent
-        # dynamic overwrite)
+        # violations: exact rows, one directory per pass
+        name = self._pass_name(buckets[0])
         keep = [c for c in cfg.key_columns if c in annotated.columns]
         failing = annotated.filter(~F.col("row_valid"))
         if cfg.pointer_diagnostics:
@@ -227,21 +217,20 @@ class ValidationRunner:
             per_rule = self.ruleset.pointer_entries_per_rule(failing)
             viol = (
                 failing.select(
-                    "bucket", *keep, F.col("content_sha256"),
-                    F.explode(per_rule).alias("_v"),
+                    *keep, F.col("content_sha256"),
+                    F.explode(per_rule).alias("_v"), "bucket",
                 )
                 .select(
-                    "bucket", *keep, "content_sha256",
-                    "_v.rule_id", "_v.pointers",
+                    *keep, "content_sha256",
+                    "_v.rule_id", "_v.pointers", "bucket",
                 )
             )
         else:
             viol = failing.select(
-                "bucket", *keep, F.col("content_sha256"),
-                F.explode("violations").alias("rule_id"),
+                *keep, F.col("content_sha256"),
+                F.explode("violations").alias("rule_id"), "bucket",
             )
-        self._clear_violation_buckets(buckets)
-        viol.write.mode("overwrite").partitionBy("bucket").parquet(cfg.violations_path)
+        viol.write.mode("overwrite").parquet(os.path.join(cfg.violations_path, f"pass={name}"))
 
         # per-bucket aggregate, collected once (≤ n_buckets rows);
         # verdicts, metrics and checkpoint are all built from it.
@@ -286,13 +275,12 @@ class ValidationRunner:
         summary.violations_written += sum(r["violation_rows"] for r in stats.values())
 
         # checkpoint last: it commits the pass
-        name = self._pass_file(buckets[0])
         for path, rows, schema in (
             (cfg.verdicts_path, verdicts, VERDICTS),
             (cfg.metrics_path, metrics, METRICS),
             (cfg.checkpoint_path, ledger, CHECKPOINT),
         ):
-            fsutil.write_parquet_file(self.spark, path, name,
+            fsutil.write_parquet_file(self.spark, path, f"{name}.parquet",
                                       pa.Table.from_pylist(rows, schema=schema))
 
 
@@ -305,23 +293,16 @@ def last_validated_snapshot(
     """Newest snapshot in the table's log whose validation completed —
     every bucket checkpointed "done" for that snapshot_id.  Walks the
     snapshot log newest-first (log order is commit order; checkpoint
-    rows carry no clock), reading only the ≤ runs × n_buckets-row
-    checkpoint table driver-side."""
+    rows carry no clock), reading the ≤ runs × n_buckets-row ledger
+    on the driver."""
     from fences_spark.sources import snaplog
 
     if not snaplog.is_snaplog_table(table_root):
         return None
-    try:
-        cp = spark.read.parquet(os.path.join(output_dir, "checkpoint"))
-    except Exception:
-        return None
-    done = (
-        cp.filter(F.col("status") == "done")
-        .groupBy("snapshot_id")
-        .agg(F.countDistinct("bucket").alias("buckets"))
-        .collect()
-    )
-    complete = {r["snapshot_id"] for r in done if r["buckets"] >= n_buckets}
+    buckets: dict[str, set[int]] = {}
+    for _, snapshot_id, b in _done_buckets(spark, _checkpoint_path(output_dir)):
+        buckets.setdefault(snapshot_id, set()).add(b)
+    complete = {s for s, bs in buckets.items() if len(bs) >= n_buckets}
     for entry in reversed(snaplog.read_log(table_root)):
         if entry["snapshot_id"] in complete:
             return entry["snapshot_id"]

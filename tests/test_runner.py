@@ -177,8 +177,8 @@ def test_crash_after_sink_write_resumes_without_duplicates(spark, cfg, monkeypat
     """A crash after the verdicts or metrics file of the second pass
     (buckets 3-5), before its checkpoint: the resume, with the same or
     another ``max_buckets_per_pass``, leaves one verdicts row per
-    (bucket, rule) and one metrics row per bucket, with a one-pass
-    run's counts."""
+    (bucket, rule), one metrics row per bucket and one violations row
+    per (row, rule), with a one-pass run's counts."""
     files = files_table(spark, N)
     cfg.max_buckets_per_pass = 3
     with monkeypatch.context() as mp:
@@ -198,6 +198,37 @@ def test_crash_after_sink_write_resumes_without_duplicates(spark, cfg, monkeypat
     assert fails["lang_enum"] == exp["bad_lang"]
     assert fails["content_present"] == exp["null_content"] + exp["empty_content"]
     assert m.agg(F.sum("rows")).first()[0] == N + exp["dup_keys"]
+    viol = spark.read.parquet(cfg.violations_path)
+    key = ["repo", "path", "commit", "content_sha256", "rule_id"]
+    assert viol.count() == viol.select(*key).distinct().count()
+    by_rule = {r[0]: r[1] for r in viol.groupBy("rule_id").count().collect()}
+    assert by_rule["lang_enum"] == exp["bad_lang"]
+    assert by_rule["content_present"] == exp["null_content"] + exp["empty_content"]
+
+
+def test_unreadable_ledger_raises(spark, cfg):
+    """Only a missing ledger means "nothing done": a file in
+    ``checkpoint/`` that is not parquet makes ``run`` raise instead of
+    silently re-running every bucket."""
+    files = files_table(spark, 1_000)
+    ValidationRunner(spark, files_ruleset(), cfg).run(files)
+    with open(os.path.join(cfg.checkpoint_path, "a-note.txt"), "w") as f:
+        f.write("not parquet")
+    with pytest.raises(pa.ArrowInvalid, match="[Pp]arquet"):
+        ValidationRunner(spark, files_ruleset(), cfg).run(files)
+
+
+def test_run_leaves_the_session_conf_alone(spark, cfg):
+    """The runner sets no session conf: a later overwrite by the caller
+    (e.g. a ``partitionBy`` corpus write) keeps the caller's mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        ValidationRunner(spark, files_ruleset(), cfg).run(files_table(spark, 1_000))
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_write_parquet_file_round_trips_through_file_uri(spark, tmp_path):
