@@ -14,7 +14,11 @@ Layout (all under one table root)::
                                        replace on commit — the one
                                        mutable file, like Iceberg's
                                        version-hint/metadata.json)
-    <root>/data/snap-<id>/*.parquet    immutable per-snapshot data
+    <root>/metadata/.lock              flock'd by a committing append
+    <root>/data/snap-<parent>-<uuid>/  immutable per-snapshot data
+                                       (an entry's ``dir``; readers
+                                       follow it, so older tables'
+                                       ``snap-<id>/`` dirs read too)
 
 Scale notes (100 TB): the log is metadata only — O(#snapshots) driver
 bytes, never shipped to executors.  Reads resolve the log to a list of
@@ -34,13 +38,14 @@ Semantics matched to Iceberg's options (read via
   start exclusive, end inclusive.
 
 Snapshot ids are opaque deterministic strings (sha256 of parent id +
-sorted file listing) — no wall clock, so tests and re-runs are
+sorted data-file sizes) — no wall clock, so tests and re-runs are
 byte-stable; ordering lives in the log, as in Iceberg's
 parent-pointer chain.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import json
 import os
@@ -63,7 +68,7 @@ def is_snaplog_table(root: str) -> bool:
 
 def read_log(root: str) -> list[dict]:
     """Ordered snapshot log (oldest first). Each entry:
-    {snapshot_id, parent_id, dir, n_files}."""
+    {snapshot_id, parent_id, dir, n_files, columns}."""
     with open(_log_path(root)) as f:
         return json.load(f)
 
@@ -77,7 +82,6 @@ def _commit(root: str, log: list[dict]) -> None:
     """Atomic log swap: temp file + rename, the parquet-dir analog of
     Iceberg's metadata-file commit (readers see the old or the new
     log, never a partial one)."""
-    os.makedirs(os.path.join(root, _META), exist_ok=True)
     tmp = _log_path(root) + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(log, f, indent=1)
@@ -87,9 +91,15 @@ def _commit(root: str, log: list[dict]) -> None:
 def append(spark: SparkSession, root: str, df: DataFrame) -> str:
     """Commit ``df`` as a new snapshot; returns its snapshot id.
 
-    The data write happens BEFORE the log commit: a crash between the
-    two leaves an orphan directory invisible to every reader (safe),
-    never a log entry pointing at missing data.
+    The data goes, outside any lock, straight into its own
+    ``data/snap-<parent>-<uuid>/``; the commit is ONE head check under
+    an exclusive ``flock`` on ``metadata/.lock`` (the kernel drops a
+    dead holder's lock).  A moved head removes this attempt's data and
+    raises, also when the write itself failed (a racing commit may
+    have reclaimed its dir): the table is single-writer by contract.
+    A crash before the log swap leaves an orphan no reader sees; the
+    next commit on the same parent deletes every other
+    ``snap-<parent>-*`` dir, as none of them can commit once it has.
     """
     log = read_log(root) if is_snaplog_table(root) else []
     parent = log[-1]["snapshot_id"] if log else ""
@@ -100,67 +110,49 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> str:
             raise ValueError(
                 f"snapshot schema mismatch: table has {prev_cols}, append has {cols}"
             )
-    staging = os.path.join(root, "data", f"staging-{uuid.uuid4().hex}")
-    df.write.mode("error").parquet(staging)
-    names = sorted(
-        n for n in os.listdir(staging) if not n.startswith((".", "_"))
-    )
-    # id from parent + sorted data-file sizes: part-file NAMES embed
-    # write UUIDs, sizes don't — so an identical content chain gets
-    # identical ids (byte-stable tests/resumes) while within one table
-    # the advancing parent makes collisions impossible.
-    sizes = sorted(os.path.getsize(os.path.join(staging, n)) for n in names)
-    snap_id = hashlib.sha256(
-        "\n".join([parent, *map(str, sizes)]).encode()
-    ).hexdigest()[:16]
-    final = os.path.join(root, "data", f"snap-{snap_id}")
-    if os.path.isdir(final):
-        # Either an orphan from OUR attempt that crashed between
-        # os.replace and _commit (invisible to readers — not in the
-        # log — and the deterministic snap_id means this retry IS that
-        # attempt: clear it so the retry isn't permanently wedged on
-        # ENOTEMPTY), or a CONCURRENT writer racing us from the same
-        # parent.  Re-read the log to tell them apart: a committed
-        # snap-<id> must never be silently deleted — the table is
-        # single-writer by contract (like a single Iceberg committer),
-        # so surface the race loudly instead.
+    data = os.path.join(root, "data")
+    prefix = f"snap-{parent or 'root'}-"
+    final = os.path.join(data, prefix + uuid.uuid4().hex)
+    failed = None
+    try:
+        df.write.mode("error").parquet(final)
+    except Exception as e:  # judged after the head check: a racing
+        failed = e  # commit may have reclaimed ``final`` mid-write
+    os.makedirs(os.path.join(root, _META), exist_ok=True)
+    with open(os.path.join(root, _META, ".lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
         fresh = read_log(root) if is_snaplog_table(root) else []
-        if any(s["snapshot_id"] == snap_id for s in fresh):
-            shutil.rmtree(staging, ignore_errors=True)
+        head = fresh[-1]["snapshot_id"] if fresh else ""
+        if head != parent or failed:
+            shutil.rmtree(final, ignore_errors=True)
+            if head == parent:
+                raise failed
             raise RuntimeError(
-                f"concurrent append detected: snapshot {snap_id} was "
-                "committed by another writer while this append was in "
-                "flight; snaplog tables are single-writer"
-            )
-        shutil.rmtree(final)
-    os.replace(staging, final)
-    # Optimistic-concurrency check: the snap_id probe above re-read the
-    # log only when `final` already existed, and `log` itself is the
-    # stale read from function entry — a concurrent writer that
-    # committed a DIFFERENT snapshot mid-flight would otherwise be
-    # silently clobbered by _commit (its log entry lost, its data
-    # orphaned).  Re-read immediately before commit and fail loudly if
-    # the parent advanced; our data dir is removed so the aborted
-    # attempt leaves no orphan.
-    fresh = read_log(root) if is_snaplog_table(root) else []
-    fresh_parent = fresh[-1]["snapshot_id"] if fresh else ""
-    if fresh_parent != parent:
-        shutil.rmtree(final, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent append detected: table head moved from "
-            f"{parent or '<empty>'} to {fresh_parent or '<empty>'} while "
-            "this append was in flight; snaplog tables are single-writer"
-        )
-    log.append(
-        {
+                f"concurrent append detected: table head moved from "
+                f"{parent or '<empty>'} to {head or '<empty>'} while "
+                "this append was in flight; snaplog tables are single-writer"
+            ) from failed
+        # listed under the lock: only a commit on this parent reclaims
+        # this dir, and none has happened while the head is unmoved
+        names = sorted(n for n in os.listdir(final) if not n.startswith((".", "_")))
+        # id from parent + sorted data-file sizes: part-file NAMES embed
+        # write UUIDs, sizes don't — so an identical content chain gets
+        # identical ids (byte-stable tests/resumes) while within one
+        # table the advancing parent makes collisions impossible.
+        sizes = sorted(os.path.getsize(os.path.join(final, n)) for n in names)
+        snap_id = hashlib.sha256(
+            "\n".join([parent, *map(str, sizes)]).encode()
+        ).hexdigest()[:16]
+        _commit(root, log + [{
             "snapshot_id": snap_id,
             "parent_id": parent or None,
             "dir": os.path.relpath(final, root),
             "n_files": len(names),
             "columns": cols,
-        }
-    )
-    _commit(root, log)
+        }])
+        for n in os.listdir(data):
+            if n.startswith(prefix) and n != os.path.basename(final):
+                shutil.rmtree(os.path.join(data, n), ignore_errors=True)
     return snap_id
 
 

@@ -60,7 +60,7 @@ def reset_stale_epochs(sess, sink_path: str, ckpt_path: str) -> None:
     so remote checkpoint/sink schemes behave like local paths.
 
     Shared by every per-epoch-partitioned streaming sink (drift,
-    schema drift)."""
+    schema drift, validation, stateful running stats)."""
     import logging
     import uuid as _uuid
 

@@ -17,8 +17,8 @@ pattern with explicitly managed state:
   (`operators/text` Column algebra) before ``groupBy``, so Arrow
   batches are tiny and the per-row work stays in codegen.
 - emitted rows are the cumulative totals per stratum per micro-batch
-  (update semantics), written through ``foreachBatch`` with the epoch
-  id so the sink is idempotent under micro-batch replay.
+  (update semantics), overwriting the epoch's ``epoch_id=<n>/``
+  partition so the sink is idempotent under micro-batch replay.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fences_spark.operators.text import quality_score, whitespace_token_count
+from fences_spark.streaming.drift import reset_stale_epochs
 
 OUTPUT_SCHEMA = (
     "stratum string, n_docs long, n_tokens long, mean_quality double"
@@ -100,14 +101,15 @@ def start_running_stats_stream(
     stream_df: DataFrame, cfg: StatefulStreamConfig, **kwargs
 ) -> StreamingQuery:
     """Drain available input through the stateful accounting operator;
-    each micro-batch's cumulative rows append with their epoch id."""
+    each micro-batch's cumulative rows overwrite its epoch's partition."""
     out = running_corpus_stats(stream_df, **kwargs)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-            "append"
-        ).parquet(cfg.stats_path)
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(cfg.stats_path, f"epoch_id={epoch_id}")
+        )
 
+    reset_stale_epochs(stream_df.sparkSession, cfg.stats_path, cfg.checkpoint_path)
     return (
         out.writeStream.outputMode("update")
         .option("checkpointLocation", cfg.checkpoint_path)

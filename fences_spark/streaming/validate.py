@@ -6,16 +6,16 @@ snapshots (fences_spark.run.runner); this module is the optional
 (repo, path, commit, lang, content) rows is validated continuously,
 with the per-rule predicate projection applied **before** the sink so
 each micro-batch writes verdict-annotated rows + aggregated bucket
-verdicts exactly once (checkpointed by Spark's own WAL).
+verdicts exactly once (checkpointed by Spark's own WAL; each sink
+overwrites its ``epoch_id=<n>/`` partition, so a replayed epoch whose
+commit was not recorded does not duplicate rows).
 
 Design notes for cluster scale:
 - the predicate projection is narrow (no shuffle) — a streaming query
   over it keeps the stateless path: no watermark/state store needed;
 - bucket verdict aggregation is done per micro-batch inside
   ``foreachBatch`` (deterministic re-execution per epoch id), not as
-  a stateful streaming agg — verdict rows are idempotently
-  re-writable at the (epoch, bucket) grain, mirroring the batch
-  runner's dynamic partition overwrite;
+  a stateful streaming agg — the per-epoch sink contract of drift.py;
 - the reference has no streaming analog (fully batch, eager —
   SURVEY.md §2.B); semantics here are the batch semantics applied per
   micro-batch.
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from fences_spark.compiler.ruleset import RuleSet
+from fences_spark.streaming.drift import reset_stale_epochs
 
 
 @dataclass
@@ -103,9 +104,9 @@ def start_validation_stream(
     *,
     trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """Validate a stream end-to-end.  Each micro-batch appends the
-    annotated rows and writes that epoch's per-(bucket, rule) verdict
-    counts; both sinks live under ``cfg.output_dir``.
+    """Validate a stream end-to-end.  Each micro-batch overwrites its
+    ``epoch_id=<n>/`` partition of the annotated rows and of its
+    per-(bucket, rule) verdict counts; both under ``cfg.output_dir``.
 
     ``trigger_available_now=True`` drains everything currently
     available and stops — the batch-incremental mode used in tests
@@ -117,7 +118,8 @@ def start_validation_stream(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            batch_df.write.mode("append").parquet(cfg.rows_path)
+            part = f"epoch_id={epoch_id}"
+            batch_df.write.mode("overwrite").parquet(os.path.join(cfg.rows_path, part))
             agg_exprs = []
             for rid in rule_ids:
                 agg_exprs.append(F.sum(F.col(rid).cast("long")).alias(f"{rid}__pass"))
@@ -128,16 +130,17 @@ def start_validation_stream(
                 *agg_exprs,
             )
             stack = ", ".join(f"'{rid}', {rid}__pass, {rid}__fail" for rid in rule_ids)
-            verdicts = per_bucket.selectExpr(
+            per_bucket.selectExpr(
                 "bucket",
                 "rows",
                 "rows_invalid",
                 f"stack({len(rule_ids)}, {stack}) as (rule_id, n_pass, n_fail)",
-            ).withColumn("epoch_id", F.lit(epoch_id))
-            verdicts.write.mode("append").parquet(cfg.verdicts_path)
+            ).write.mode("overwrite").parquet(os.path.join(cfg.verdicts_path, part))
         finally:
             batch_df.unpersist()
 
+    for path in (cfg.rows_path, cfg.verdicts_path):
+        reset_stale_epochs(stream_df.sparkSession, path, cfg.checkpoint_path)
     writer = (
         annotated.writeStream.outputMode("append")
         .option("checkpointLocation", cfg.checkpoint_path)

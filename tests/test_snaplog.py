@@ -237,11 +237,10 @@ def test_append_type_mismatch_raises(spark, tmp_path):
 
 
 def test_append_retry_after_crash_between_replace_and_commit(spark, tmp_path, monkeypatch):
-    """Crash window 1: data dir moved to its final snap-<id> location
-    but the log commit never ran.  The orphan is invisible to readers
-    (documented), and — because snap_id is deterministic — the retry
-    regenerates the SAME id; it must clear the orphan and commit, not
-    wedge forever on os.replace ENOTEMPTY (found by round-4 review)."""
+    """Crash window: the data dir is written in full but the log commit
+    never ran.  The orphan is invisible to readers (documented), the
+    retry commits (same deterministic id) and reclaims the crashed
+    attempt's dir, so ``data/`` holds only the committed snapshot."""
     root = str(tmp_path / "tbl")
     df = spark.range(100).select(F.col("id").alias("x"))
 
@@ -256,34 +255,32 @@ def test_append_retry_after_crash_between_replace_and_commit(spark, tmp_path, mo
     log = snaplog.read_log(root)
     assert [s["snapshot_id"] for s in log] == [sid]
     assert snaplog.read(spark, root, snapshot_id=sid).count() == 100
+    assert os.listdir(os.path.join(root, "data")) == [os.path.basename(log[0]["dir"])]
 
 
 def test_concurrent_append_of_different_snapshot_detected(spark, tmp_path, monkeypatch):
-    """TOCTOU window (round-5 advice): a concurrent writer that commits a
-    DIFFERENT snapshot while our append is in flight must not be clobbered
-    by our stale-log _commit — the optimistic re-read immediately before
-    commit raises instead, and the racer's snapshot survives intact."""
-    import os as _os
-
+    """TOCTOU window: a concurrent writer that commits a DIFFERENT
+    snapshot while our append is in flight must not be clobbered by our
+    stale-log commit — the locked head check raises instead, and the
+    racer's snapshot survives intact."""
     root = str(tmp_path / "tbl")
     first = snaplog.append(spark, root, spark.range(10).select(F.col("id").alias("x")))
 
-    real_replace = _os.replace
+    real_read_log = snaplog.read_log
     state = {"raced": False, "racer_id": None}
 
-    def racing_replace(src, dst):
-        # fire exactly once, on the victim's data-dir promotion: restore
-        # the real replace, let a concurrent append fully commit, then
-        # finish the victim's own replace so it proceeds to its commit
-        if not state["raced"] and "snap-" in _os.path.basename(str(dst)):
+    def racing_read_log(r):
+        # fire once, right after the victim's first read of the log: a
+        # concurrent append commits before the victim writes its data
+        log = real_read_log(r)
+        if not state["raced"]:
             state["raced"] = True
-            monkeypatch.setattr(_os, "replace", real_replace)
             state["racer_id"] = snaplog.append(
                 spark, root, spark.range(77).select(F.col("id").alias("x"))
             )
-        real_replace(src, dst)
+        return log
 
-    monkeypatch.setattr(_os, "replace", racing_replace)
+    monkeypatch.setattr(snaplog, "read_log", racing_read_log)
     with pytest.raises(RuntimeError, match="concurrent append"):
         snaplog.append(spark, root, spark.range(33).select(F.col("id").alias("x")))
 
@@ -292,7 +289,71 @@ def test_concurrent_append_of_different_snapshot_detected(spark, tmp_path, monke
     log = snaplog.read_log(root)
     assert [s["snapshot_id"] for s in log] == [first, state["racer_id"]]
     assert snaplog.read(spark, root).count() == 10 + 77
-    data_dirs = sorted(
-        n for n in _os.listdir(_os.path.join(root, "data")) if n.startswith("snap-")
-    )
-    assert data_dirs == sorted(f"snap-{s['snapshot_id']}" for s in log)
+    data_dirs = sorted(os.listdir(os.path.join(root, "data")))
+    assert data_dirs == sorted(os.path.basename(s["dir"]) for s in log)
+
+
+# ------------------------------------------------ multi-process race
+class _StubFrame:
+    """What ``append`` uses of a DataFrame: ``schema.fields`` and
+    ``write.mode(...).parquet(path)``, here writing one pyarrow file of
+    ``n`` rows, so the race needs no JVM in the worker processes.  The
+    write first waits on ``barrier``: every racer has read the table
+    head before any of them can commit."""
+
+    def __init__(self, n, barrier):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        self.n, self.barrier = n, barrier
+        self.schema = StructType([StructField("x", LongType())])
+        self.write = self
+
+    def mode(self, _mode):
+        return self
+
+    def parquet(self, path):
+        import pyarrow as pa
+
+        self.barrier.wait(timeout=120)
+        os.makedirs(path)
+        pq.write_table(pa.table({"x": list(range(self.n))}), os.path.join(path, "part-0.parquet"))
+
+
+def _race_worker(k, roots, barrier, results):
+    for root in roots:
+        try:
+            results.put((root, k, "ok", snaplog.append(None, root, _StubFrame(k + 1, barrier))))
+        except Exception as e:  # reported to the test, never swallowed
+            results.put((root, k, "err", repr(e)))
+
+
+def test_multiprocess_race_has_one_winner_and_no_lost_append(tmp_path):
+    """4 processes append to the same fresh table in lockstep, 10
+    trials: in every trial exactly one append returns, the others raise
+    "concurrent append", and the log and ``data/`` hold just the
+    winner.  Spawned, not forked: this process hosts a JVM."""
+    import multiprocessing as mp
+
+    n_proc, roots = 4, [str(tmp_path / f"t{i}") for i in range(10)]
+    ctx = mp.get_context("spawn")
+    barrier, results = ctx.Barrier(n_proc), ctx.Queue()
+    procs = [
+        ctx.Process(target=_race_worker, args=(k, roots, barrier, results))
+        for k in range(n_proc)
+    ]
+    for p in procs:
+        p.start()
+    got = [results.get(timeout=300) for _ in range(n_proc * len(roots))]
+    for p in procs:
+        p.join(timeout=60)
+    assert all(p.exitcode == 0 for p in procs)
+
+    for root in roots:
+        outs = [(k, kind, val) for r, k, kind, val in got if r == root]
+        wins = [val for _, kind, val in outs if kind == "ok"]
+        losses = [val for _, kind, val in outs if kind == "err"]
+        assert len(wins) == 1, (root, outs)
+        assert len(losses) == n_proc - 1 and all("concurrent append" in e for e in losses), outs
+        log = snaplog.read_log(root)
+        assert [s["snapshot_id"] for s in log] == wins
+        assert os.listdir(os.path.join(root, "data")) == [os.path.basename(log[0]["dir"])]
