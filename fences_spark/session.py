@@ -3,6 +3,13 @@
 Local mode here; on a real cluster the same confs apply (AQE,
 skew-join handling, pinned broadcast threshold) and parallelism comes
 from ``spark-submit --num-executors`` instead of ``local[N]``.
+
+JIT policy: every driver and executor JVM gets ``JIT_POLICY``, JDK 17's
+four C2 (tier-4) thresholds at 10x their defaults, so code that runs for
+seconds only (start-up, planning, codegen, py4j) stays in C1 while a long
+job's row loops still reach C2.  It goes in ``defaultJavaOptions``, which
+Spark places before a caller's ``extraJavaOptions``.  On a 10M-row typed
+job (BENCH/JIT.md) it matches the default's CPU; C1-only costs 2.8x.
 """
 
 from __future__ import annotations
@@ -10,6 +17,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -53,6 +66,8 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
+        .config("spark.executor.defaultJavaOptions", JIT_POLICY)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
