@@ -4,12 +4,12 @@ Local mode here; on a real cluster the same confs apply (AQE,
 skew-join handling, pinned broadcast threshold) and parallelism comes
 from ``spark-submit --num-executors`` instead of ``local[N]``.
 
-JIT policy: every driver and executor JVM gets ``JIT_POLICY``, JDK 17's
-four C2 (tier-4) thresholds at 10x their defaults, so code that runs for
-seconds only (start-up, planning, codegen, py4j) stays in C1 while a long
-job's row loops still reach C2.  It goes in ``defaultJavaOptions``, which
-Spark places before a caller's ``extraJavaOptions``.  On a 10M-row typed
-job (BENCH/JIT.md) it matches the default's CPU; C1-only costs 2.8x.
+JIT policy: the driver JVM gets ``JIT_POLICY``, JDK 17's four C2 (tier-4)
+thresholds at 3x their defaults, so less of the code that runs for seconds
+only (start-up, planning, codegen, py4j) is C2-compiled.  It goes in
+``defaultJavaOptions``, which Spark places before a caller's
+``extraJavaOptions``; ``local[N]`` starts no executor JVM.  Measured on
+4 vCPUs only: fencebench, bench.py at sf0.1 and a 10M-row job (BENCH/JIT.md).
 """
 
 from __future__ import annotations
@@ -20,8 +20,8 @@ from pyspark.sql import SparkSession
 
 
 JIT_POLICY = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
 )
 
 
@@ -67,7 +67,6 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.defaultJavaOptions", JIT_POLICY)
-        .config("spark.executor.defaultJavaOptions", JIT_POLICY)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -18,14 +18,6 @@ import zipfile
 from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-from fences_spark.session import JIT_POLICY  # noqa: E402
-
-# spark-submit bypasses get_spark: give its driver and executors the
-# library's JIT policy so the evidence measures the JIT it ships
-JIT_CONFS = ["--conf", f"spark.driver.defaultJavaOptions={JIT_POLICY}",
-             "--conf", f"spark.executor.defaultJavaOptions={JIT_POLICY}"]
-
 ROWS = int(os.environ.get("SCALE_ROWS", "100000000"))
 DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
 # MODE=local        → one JVM, N threads (shared heap/GC — pessimistic)
@@ -71,6 +63,19 @@ def spark_submit_bin() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
+def jit_confs() -> list[str]:
+    """spark-submit bypasses get_spark: give its driver and executors the
+    library's JIT policy so the evidence measures the JIT it ships.
+    Imported here, not at module load, because fences_spark imports
+    pyspark: running a level needs pyspark in the launcher's Python,
+    importing this module does not."""
+    sys.path.insert(0, REPO)
+    from fences_spark.session import JIT_POLICY
+
+    return ["--conf", f"spark.driver.defaultJavaOptions={JIT_POLICY}",
+            "--conf", f"spark.executor.defaultJavaOptions={JIT_POLICY}"]
+
+
 def run_level(label: str, master: str, cores: int, zip_path: str) -> dict:
     cmd = ([shutil.which("taskset"), "-c", f"0-{cores - 1}"] if PIN else []) + [
         spark_submit_bin(),
@@ -82,7 +87,7 @@ def run_level(label: str, master: str, cores: int, zip_path: str) -> dict:
         # is sized to its share, never the whole machine.
         "--driver-memory", DRIVER_MEM,
         "--conf", f"spark.driver.extraJavaOptions=-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
-        *JIT_CONFS,
+        *jit_confs(),
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", "submit_validate.py"),
         "--rows", str(ROWS),
@@ -107,7 +112,7 @@ def gen_data(zip_path: str) -> None:
         spark_submit_bin(),
         "--master", "local[32]",
         "--driver-memory", DRIVER_MEM,
-        *JIT_CONFS,
+        *jit_confs(),
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", "submit_validate.py"),
         "--rows", str(ROWS),
